@@ -1150,11 +1150,11 @@ class DdlFrontend:
             # Iceberg's own DDL verb for the declared sort order —
             # sugar over the write.sort-order property (one document:
             # SHOW CREATE round-trips it as TBLPROPERTIES)
-            table.meta["properties"]["write.sort-order"] = (
-                am.group(1).strip()
-            )
-            table.refresh_declared_sort_order()
-            table._commit()
+            with table._transaction():
+                table.meta["properties"]["write.sort-order"] = (
+                    am.group(1).strip()
+                )
+                table.refresh_declared_sort_order()
             resp.message_list.append(
                 f"Set write order {am.group(1).strip()!r} on {db}.{tbl}"
             )
@@ -1163,9 +1163,9 @@ class DdlFrontend:
             action,
             re.IGNORECASE,
         ):
-            table.meta["properties"].pop("write.sort-order", None)
-            table.refresh_declared_sort_order()
-            table._commit()
+            with table._transaction():
+                table.meta["properties"].pop("write.sort-order", None)
+                table.refresh_declared_sort_order()
             resp.message_list.append(f"Cleared write order on {db}.{tbl}")
         elif am := re.match(
             r"^SET\s+TBLPROPERTIES\s*\((.+)\)\s*$",
@@ -1176,10 +1176,10 @@ class DdlFrontend:
             # declaration surface: re-derives + validates the table
             # sort order when write.sort-order OR write.bucket-layout
             # changed (the composition rules depend on the layout), in
-            # the SAME commit, reverting the in-memory handle on
-            # failure — see update_properties_validated
-            table.update_properties_validated(updates=props)
-            table._commit()
+            # the SAME commit; the transaction reverts the in-memory
+            # handle on failure
+            with table._transaction():
+                table.update_properties_validated(updates=props)
             resp.message_list.append(
                 f"Set properties {sorted(props)} on {db}.{tbl}"
             )
@@ -1194,10 +1194,10 @@ class DdlFrontend:
             # unsetting the bucket layout also re-derives: a sort
             # order constrained to the composable subset stays valid,
             # but the re-validation keeps the two properties one
-            # document either way (same revert-on-failure surface as
-            # SET — update_properties_validated)
-            table.update_properties_validated(removes=keys)
-            table._commit()
+            # document either way (same revert-on-failure transaction
+            # as SET)
+            with table._transaction():
+                table.update_properties_validated(removes=keys)
             resp.message_list.append(
                 f"Unset properties {sorted(keys)} on {db}.{tbl}"
             )

@@ -47,6 +47,13 @@ class FileIO(ABC):
         """Write, creating parent namespaces as needed."""
 
     @abstractmethod
+    def create_text(self, path: str, text: str) -> None:
+        """Exclusive create: write ``path`` only if nothing is there,
+        else raise ``FileExistsError``. The metadata commit's conflict
+        check — two writers from one base both claim ``v{N+1}``, and
+        exactly one create succeeds."""
+
+    @abstractmethod
     def exists(self, path: str) -> bool: ...
 
     @abstractmethod
@@ -134,17 +141,32 @@ class LocalFileIO(FileIO):
         with open(path, encoding="utf-8") as f:
             return f.read()
 
+    @staticmethod
+    def _staged(path: str, data: bytes) -> str:
+        """Write ``data`` to a sibling temp file and return its path."""
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+        with open(tmp, "wb") as f:
+            f.write(data)
+        return tmp
+
     def write_text(self, path: str, text: str) -> None:
         """Atomic: write a sibling temp file, then rename over the
         target. A truncate-in-place write lets a concurrent reader
         (another handle, the streaming source's worker process)
         observe an EMPTY version-hint mid-commit — the torn read
         Iceberg's metadata protocol avoids the same way."""
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(text)
-        os.replace(tmp, path)
+        os.replace(self._staged(path, text.encode("utf-8")), path)
+
+    def create_text(self, path: str, text: str) -> None:
+        """Temp file + hard link: ``os.link`` refuses an existing
+        target, so the create is exclusive, and the linked file is
+        complete the moment it appears."""
+        tmp = self._staged(path, text.encode("utf-8"))
+        try:
+            os.link(tmp, path)
+        finally:
+            os.remove(tmp)
 
     def exists(self, path: str) -> bool:
         return os.path.exists(path)
@@ -171,11 +193,7 @@ class LocalFileIO(FileIO):
             return f.read()
 
     def write_bytes(self, path: str, data: bytes) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, path)
+        os.replace(self._staged(path, data), path)
 
     def list_files(self, path: str) -> list[str]:
         out = []
@@ -220,6 +238,11 @@ class InMemoryFileIO(FileIO):
         while parent and parent not in self.dirs:
             self.dirs.add(parent)
             parent = os.path.dirname(parent)
+
+    def create_text(self, path: str, text: str) -> None:
+        if self._norm(path) in self.blobs:
+            raise FileExistsError(path)
+        self.write_text(path, text)
 
     def exists(self, path: str) -> bool:
         key = self._norm(path)
@@ -269,12 +292,16 @@ class InMemoryFileIO(FileIO):
 #
 # What the table format REQUIRES from a store (and nothing more):
 #   1. atomic whole-object PUT (readers see the old object or the new
-#      one, never a partial write) — carries the version-hint commit;
+#      one, never a partial write) — carries the version-hint update;
 #   2. read-after-write consistency for the version hint (S3 provides
 #      this since 2020; the hint names the metadata JSON, which is
 #      immutable once written, so everything else only needs eventual
 #      list consistency);
-#   3. GET / DELETE by key and LIST by prefix.
+#   3. GET / DELETE by key and LIST by prefix;
+#   4. a conditional PUT that fails when the key exists (S3's
+#      ``If-None-Match: *``, ``put_object(..., if_absent=True)`` here)
+#      — carries the commit's conflict check: two writers from one
+#      base both claim ``v{N+1}.metadata.json`` and one create fails.
 # Deliberately NOT required: rename (S3 has none — LocalFileIO's
 # rename-based atomic write is an optimization, not a protocol
 # dependency), append, partial write, directory objects (namespaces
@@ -297,7 +324,9 @@ class FakeObjectStore:
     def __init__(self) -> None:
         self._objects: dict[str, bytes] = {}
 
-    def put_object(self, key: str, data: bytes) -> None:
+    def put_object(self, key: str, data: bytes, if_absent: bool = False) -> None:
+        if if_absent and key in self._objects:
+            raise FileExistsError(key)
         self._objects[key] = bytes(data)  # atomic whole-object PUT
 
     def get_object(self, key: str) -> bytes:
@@ -333,13 +362,19 @@ class DirectoryObjectStore:
     def _path(self, key: str) -> str:
         return os.path.join(self.root, key)
 
-    def put_object(self, key: str, data: bytes) -> None:
+    def put_object(self, key: str, data: bytes, if_absent: bool = False) -> None:
         p = self._path(key)
         os.makedirs(os.path.dirname(p), exist_ok=True)
         tmp = f"{p}.inflight.{os.getpid()}.{uuid.uuid4().hex[:8]}"
         with open(tmp, "wb") as f:
             f.write(bytes(data))
-        os.replace(tmp, p)  # readers see the old object or the new one
+        if not if_absent:
+            os.replace(tmp, p)  # readers see the old object or the new one
+            return
+        try:
+            os.link(tmp, p)  # refuses an existing object
+        finally:
+            os.remove(tmp)
 
     def get_object(self, key: str) -> bytes:
         with open(self._path(key), "rb") as f:  # FileNotFoundError
@@ -421,10 +456,26 @@ class S3ObjectStore:
 
     # -- the strict surface -----------------------------------------------
 
-    def put_object(self, key: str, data: bytes) -> None:
-        self._s3().put_object(
-            Bucket=self.bucket, Key=self._full(key), Body=bytes(data)
-        )
+    def put_object(self, key: str, data: bytes, if_absent: bool = False) -> None:
+        """``if_absent`` is S3's conditional write (``If-None-Match:
+        *``): the service answers 412 PreconditionFailed when the key
+        exists, or 409 ConditionalRequestConflict when a concurrent
+        conditional PUT of the same key is in flight."""
+        from botocore.exceptions import ClientError  # noqa: PLC0415
+
+        extra = {"IfNoneMatch": "*"} if if_absent else {}
+        try:
+            self._s3().put_object(
+                Bucket=self.bucket, Key=self._full(key), Body=bytes(data),
+                **extra,
+            )
+        except ClientError as e:
+            code = e.response.get("Error", {}).get("Code", "")
+            if if_absent and code in (
+                "PreconditionFailed", "ConditionalRequestConflict"
+            ):
+                raise FileExistsError(key) from e
+            raise
 
     def get_object(self, key: str) -> bytes:
         from botocore.exceptions import ClientError  # noqa: PLC0415
@@ -498,6 +549,13 @@ class ObjectStoreFileIO(FileIO):
         # guarantee #1) — this is exactly why the protocol must not
         # depend on rename
         self.store.put_object(self._key(path), text.encode("utf-8"))
+
+    def create_text(self, path: str, text: str) -> None:
+        # a conditional PUT, not a probe-then-write: the check and the
+        # write are one store operation
+        self.store.put_object(
+            self._key(path), text.encode("utf-8"), if_absent=True
+        )
 
     def read_bytes(self, path: str) -> bytes:
         return self.store.get_object(self._key(path))

@@ -19,13 +19,22 @@ describe) is:
   moto). The loser of a race gets ``ConcurrentCommitError`` and must
   refresh + retry — exactly Iceberg's Glue-catalog semantics.
 
+This is the catalog-of-record form of the one commit check every
+``LakeTable`` makes (``LakeTable._commit``): a commit names its base
+metadata, and loses if another writer committed since. Plain tables
+make it with an exclusive create of ``v{N+1}.metadata.json``; a
+Glue-managed table writes a writer-unique ``v{N+1}-{uuid}`` file (no
+create can collide) and the pointer compare-and-set decides instead.
+``ConcurrentCommitError`` and ``commit_with_retries`` live in
+``table_format`` and are re-exported here.
+
 ``GlueLakeCatalog`` wraps ``LakeCatalog``: table metadata still lives
 behind its FileIO (local, directory-store, or S3ObjectStore), while
 Glue holds the authoritative pointer. The store-level version hint is
-still written (it is what the streaming source's worker re-reads), so
-a Glue-registered table remains readable by every store-level path;
-the Glue pointer adds the cross-engine discovery + CAS-guarded commit
-the hint file alone cannot give on an object store.
+still written, best-effort, after the pointer moves (it is what the
+streaming source's worker re-reads), so a Glue-registered table
+remains readable by every store-level path; the Glue pointer adds the
+cross-engine discovery the hint file alone cannot give.
 
 ``register_iceberg_export`` closes the reference's interop loop for
 the EXPORTED Iceberg tables too: export_to_iceberg writes spec
@@ -46,12 +55,13 @@ from pyspark.sql import types as T
 
 from .fileio import FileIO
 from .partitioning import PartitionSpec
-from .table_format import LakeCatalog, LakeTable, TableFormatError
-
-
-class ConcurrentCommitError(TableFormatError):
-    """Another writer advanced the Glue pointer since this table was
-    loaded; refresh and retry (Iceberg Glue-catalog commit contract)."""
+from .table_format import (  # noqa: F401 — re-exported
+    ConcurrentCommitError,
+    LakeCatalog,
+    LakeTable,
+    TableFormatError,
+    commit_with_retries,
+)
 
 
 def _boto_glue(region: "str | None" = None, endpoint_url: "str | None" = None):
@@ -552,10 +562,7 @@ class GlueLakeCatalog:
                     if code != "EntityNotFoundException":
                         raise
                 self._clear_rename_markers(new_database, new_table)
-                t = self.load_table(new_database, new_table)
-                t.meta["identifier"] = f"{new_database}.{new_table}"
-                t._commit()
-                return t
+                return self._reidentify(new_database, new_table)
             src_loc = (entry.get("StorageDescriptor") or {}).get(
                 "Location"
             )
@@ -631,9 +638,13 @@ class GlueLakeCatalog:
             if e.response["Error"]["Code"] != "EntityNotFoundException":
                 raise
         self._clear_rename_markers(new_database, new_table)
-        t = self.load_table(new_database, new_table)
-        t.meta["identifier"] = f"{new_database}.{new_table}"
-        t._commit()
+        return self._reidentify(new_database, new_table)
+
+    def _reidentify(self, database: str, table: str) -> LakeTable:
+        """Load a renamed table and commit its new identifier."""
+        t = self.load_table(database, table)
+        with t._transaction():
+            t.meta["identifier"] = f"{database}.{table}"
         return t
 
     def list_tables(self) -> list[tuple[str, str]]:
@@ -704,38 +715,6 @@ class GlueLakeCatalog:
             )
 
         t.on_commit = publish
-
-
-def commit_with_retries(
-    catalog: "GlueLakeCatalog",
-    database: str,
-    table: str,
-    action,
-    attempts: int = 3,
-):
-    """Iceberg-style optimistic-commit retry loop: load a FRESH handle,
-    run ``action(table)``, and if another writer won the CAS race,
-    reload and replay — up to ``attempts`` times, then re-raise the
-    last conflict.
-
-    For COMMUTATIVE actions only (appends, merge-on-read deletes,
-    compaction): the action is re-executed against the new base, which
-    is exactly what Iceberg's commit retry does with its pending
-    updates. Read-modify-write actions whose intent depends on the
-    observed base (e.g. "rename the newest column") must not be
-    retried blindly — revalidate inside ``action`` instead."""
-    last: "ConcurrentCommitError | None" = None
-    for _ in range(max(1, attempts)):
-        t = catalog.load_table(database, table)
-        if t is None:
-            raise TableFormatError(
-                f"table {database}.{table} does not exist (glue)"
-            )
-        try:
-            return action(t)
-        except ConcurrentCommitError as e:
-            last = e
-    raise last
 
 
 # ---------------------------------------------------------------------------

@@ -74,10 +74,13 @@ metadata JSON.
 
 from __future__ import annotations
 
+import copy
 import json
 import re
 import time
 import uuid
+import warnings
+from contextlib import contextmanager
 from dataclasses import dataclass
 from pathlib import Path
 from typing import Any
@@ -112,6 +115,12 @@ _BROADCAST_KEYFILE_MAX_BYTES = 32 * 1024 * 1024
 
 class TableFormatError(RuntimeError):
     pass
+
+
+class ConcurrentCommitError(TableFormatError):
+    """Another writer committed since this handle loaded its base
+    metadata; refresh and retry (Iceberg's optimistic-commit
+    contract)."""
 
 
 @dataclass
@@ -1112,10 +1121,6 @@ class LakeCatalog:
             "snapshots": [],
         }
         t = LakeTable(loc, meta, io=self.io)
-        # CREATE-time sort-order declaration (write.sort-order): parse
-        # and validate against the schema before the v1 commit so a
-        # bad declaration fails the CREATE, not the first append
-        t.refresh_declared_sort_order()
         # a catalog-of-record layer asks for writer-unique metadata
         # names so even the CREATE race cannot overwrite objects
         t.unique_metadata_names = unique_metadata_names
@@ -1123,8 +1128,15 @@ class LakeCatalog:
         # will point at it — no pointer exists to diverge from yet, so
         # the catalog-of-record commit guard does not apply to CREATE
         t.allow_uncataloged_commit = True
-        t._commit(version=1)
-        t.allow_uncataloged_commit = False
+        try:
+            # no base yet, so this commits v1; the CREATE-time
+            # sort-order declaration (write.sort-order) is validated
+            # inside it, so a bad declaration fails the CREATE, not
+            # the first append
+            with t._transaction():
+                t.refresh_declared_sort_order()
+        finally:
+            t.allow_uncataloged_commit = False
         return t
 
     def load_table(self, database: str, table: str) -> "LakeTable | None":
@@ -1180,9 +1192,9 @@ class LakeCatalog:
         dst = self._table_dir(new_database, new_table)
         self.io.rename_dir(str(src), str(dst))
         t = LakeTable.load(dst, io=self.io)
-        t.meta["identifier"] = f"{new_database}.{new_table}"
-        t.meta["location"] = str(dst)
-        t._commit()
+        with t._transaction():
+            t.meta["identifier"] = f"{new_database}.{new_table}"
+            t.meta["location"] = str(dst)
         return t
 
     def list_tables(self) -> list[tuple[str, str]]:
@@ -1194,6 +1206,37 @@ class LakeCatalog:
                 if self.table_exists(db, tb):
                     out.append((db, tb))
         return out
+
+
+def commit_with_retries(
+    catalog,
+    database: str,
+    table: str,
+    action,
+    attempts: int = 3,
+):
+    """Iceberg-style optimistic-commit retry loop over any catalog
+    (``LakeCatalog``, ``GlueLakeCatalog``): load a FRESH handle, run
+    ``action(table)``, and if another writer committed first
+    (``ConcurrentCommitError``), reload and replay — up to
+    ``attempts`` times, then re-raise the last conflict.
+
+    For COMMUTATIVE actions only (appends, merge-on-read deletes,
+    compaction): the action is re-executed against the new base, which
+    is exactly what Iceberg's commit retry does with its pending
+    updates. Read-modify-write actions whose intent depends on the
+    observed base (e.g. "rename the newest column") must not be
+    retried blindly — revalidate inside ``action`` instead."""
+    last: "ConcurrentCommitError | None" = None
+    for _ in range(max(1, attempts)):
+        t = catalog.load_table(database, table)
+        if t is None:
+            raise TableFormatError(f"table {database}.{table} does not exist")
+        try:
+            return action(t)
+        except ConcurrentCommitError as e:
+            last = e
+    raise last
 
 
 _ZORDER_BITS = 6  # 64 equi-depth bins per clustered column
@@ -1284,8 +1327,10 @@ class LakeTable:
         # follow (recovery/debug escape hatch; see _commit)
         self.allow_uncataloged_commit = False
         # the metadata file this handle's state was loaded from — the
-        # base a CAS publish compares the catalog pointer against
+        # base every commit is checked against (see _commit)
         self.loaded_from: str | None = None
+        # set while a _transaction is open (nested ones join it)
+        self._in_transaction = False
         # DATA-plane namespace ops (maintenance deletes/listings,
         # stream source dir). Data files are written by Spark's Hadoop
         # FS layer — local in this container — so this defaults to
@@ -1302,10 +1347,22 @@ class LakeTable:
         location = Path(location)
         if isinstance(io, LocalFileIO) and not location.is_absolute():
             location = location.resolve()  # same rule as LakeCatalog
-        hint = io.read_text(
-            str(location / "_meta" / "version-hint.text")
-        ).strip()
-        meta_file = str(location / "_meta" / _hint_to_filename(hint))
+        meta_dir = location / "_meta"
+        hint = io.read_text(str(meta_dir / "version-hint.text")).strip()
+        if hint.endswith(".metadata.json"):
+            fname = hint  # catalog of record: a writer-unique name
+        else:
+            # plain table: the hint is best-effort, the exclusive
+            # v{N+1} create is the commit. Roll forward past versions
+            # committed after the hint was last written (a writer that
+            # died between the two writes) — Iceberg
+            # HadoopTableOperations' rule; without it a crash in that
+            # window would wedge every later commit on a conflict
+            v = int(hint)
+            while io.exists(str(meta_dir / f"v{v + 1}.metadata.json")):
+                v += 1
+            fname = f"v{v}.metadata.json"
+        meta_file = str(meta_dir / fname)
         t = LakeTable(
             location, _meta_from_spec(json.loads(io.read_text(meta_file))),
             io=io,
@@ -1324,14 +1381,48 @@ class LakeTable:
     def refresh(self) -> "LakeTable":
         """Re-read committed metadata (reference: table.refresh(),
         iceberg_helper.py:365,384). Also resyncs ``loaded_from``, the
-        base pointer a catalog-of-record publish compares against — so
-        a refreshed handle can commit again after losing a CAS race."""
+        base every commit is checked against — so a refreshed handle
+        can commit again after losing a race."""
         fresh = LakeTable.load(self.location, io=self.io)
         self.meta = fresh.meta
         self.loaded_from = fresh.loaded_from
         return self
 
-    def _commit(self, version: int | None = None) -> None:
+    @contextmanager
+    def _transaction(self):
+        """THE commit protocol: every metadata change is ``with
+        self._transaction(): <mutate self.meta>``. A clean exit commits
+        (``_commit``); any exception — failed validation, a failed data
+        write, a lost commit race — restores ``meta`` to its state at
+        entry and propagates, so the handle never runs ahead of disk.
+        A nested transaction joins the outermost one (rename_column
+        runs commit_schema; compact runs _write): one commit, one
+        rollback point."""
+        if self._in_transaction:
+            yield
+            return
+        base = copy.deepcopy(self.meta)
+        self._in_transaction = True
+        try:
+            yield
+            self._commit()
+        except BaseException:
+            self.meta = base
+            raise
+        finally:
+            self._in_transaction = False
+
+    def _commit(self) -> None:
+        """Write ``meta`` as the next metadata version — the single
+        write point, called only by ``_transaction``. The next version
+        is the BASE's (``loaded_from``) plus one, and the metadata file
+        is created exclusively: if another writer committed that
+        version since this handle loaded, the create fails and the
+        commit raises ``ConcurrentCommitError`` (plain tables). Under a
+        catalog of record the file name is writer-unique and the
+        catalog's pointer compare-and-set (``on_commit``) makes the
+        same check. The version hint is written last and best-effort:
+        ``load`` rolls forward past a hint that lags."""
         if (
             self.on_commit is None
             and not self.allow_uncataloged_commit
@@ -1353,27 +1444,29 @@ class LakeTable:
                 "catalog, or set allow_uncataloged_commit=True)"
             )
         meta_dir = self.location / "_meta"
-        if version is None:
-            hint_file = str(meta_dir / "version-hint.text")
-            version = (
-                _hint_to_version(self.io.read_text(hint_file).strip()) + 1
-                if self.io.exists(hint_file)
-                else 1
-            )
+        base = self.loaded_from
+        version = (
+            _hint_to_version(base.rsplit("/", 1)[-1]) + 1 if base else 1
+        )
         if self.unique_metadata_names:
             # catalog-of-record mode: the metadata OBJECT key must be
-            # unique per writer (Iceberg's uuid'd metadata file names).
-            # With the deterministic v{N} key, two writers racing from
-            # the same base both compute N and the loser's PUT lands on
-            # the winner's committed object BEFORE the CAS can reject
-            # it — last-writer-wins corruption the pointer never sees.
+            # unique per writer (Iceberg's uuid'd metadata file names),
+            # so a racing writer's object is never even contended —
+            # the catalog pointer CAS below decides the race
             fname = f"v{version}-{uuid.uuid4().hex[:8]}.metadata.json"
         else:
             fname = f"v{version}.metadata.json"
         meta_path = str(meta_dir / fname)
-        self.io.write_text(
-            meta_path, json.dumps(_meta_to_spec(self.meta), indent=1)
-        )
+        try:
+            self.io.create_text(
+                meta_path, json.dumps(_meta_to_spec(self.meta), indent=1)
+            )
+        except FileExistsError as e:
+            raise ConcurrentCommitError(
+                f"{self.identifier}: v{version} was committed by another "
+                f"writer since this handle loaded {base!r}; refresh and "
+                "retry the commit"
+            ) from e
         if self.on_commit is not None:
             # catalog-of-record publish (e.g. Glue pointer CAS) — the
             # CAS *is* the commit: it runs after the immutable metadata
@@ -1382,14 +1475,25 @@ class LakeTable:
             # the store-level hint, so hint-based readers (streaming
             # source) never see a version the catalog rejected
             self.on_commit(version, meta_path)
+        self.loaded_from = meta_path
         # hint carries the filename in unique mode (readers resolve it
         # via _hint_to_filename); the bare number otherwise (stable
-        # format for plain tables)
-        self.io.write_text(
-            str(meta_dir / "version-hint.text"),
-            fname if self.unique_metadata_names else str(version),
-        )
-        self.loaded_from = meta_path
+        # format for plain tables). The commit has already happened:
+        # a failed hint write is reported, not raised — raising would
+        # roll the handle back behind disk and invite a duplicate
+        # retry (Iceberg's "best-effort version pointer")
+        try:
+            self.io.write_text(
+                str(meta_dir / "version-hint.text"),
+                fname if self.unique_metadata_names else str(version),
+            )
+        except Exception as e:  # noqa: BLE001
+            warnings.warn(
+                f"{self.identifier}: committed {fname} but the version "
+                f"hint write failed ({e!r}); readers roll forward to it",
+                RuntimeWarning,
+                stacklevel=2,
+            )
 
     @property
     def identifier(self) -> str:
@@ -1456,59 +1560,22 @@ class LakeTable:
         else:
             self.meta.pop("sort_order", None)
 
-    def _declaration_snapshot(
-        self,
-    ) -> tuple[dict, "list | None", "list | None"]:
-        """The (properties, sort_order, clustering) triple a failed
-        declaration change reverts to. One definition shared by every
-        revert site (SET/UNSET TBLPROPERTIES, compact) — r12 review:
-        three hand-rolled copies would silently diverge the moment
-        refresh_declared_sort_order mutates anything new. Covers
-        ``clustering`` too (ADVICE r12): a z-order compact mutates it
-        alongside the sort-order declaration, and a failed rewrite
-        must revert the whole layout claim, not half of it."""
-        return (
-            dict(self.meta["properties"]),
-            self.meta.get("sort_order"),
-            self.meta.get("clustering"),
-        )
-
-    def _restore_declaration(
-        self, prior: tuple[dict, "list | None", "list | None"]
-    ) -> None:
-        props, order, clustering = prior
-        self.meta["properties"] = props
-        if order is None:
-            self.meta.pop("sort_order", None)
-        else:
-            self.meta["sort_order"] = order
-        if clustering is None:
-            self.meta.pop("clustering", None)
-        else:
-            self.meta["clustering"] = clustering
-
     def update_properties_validated(
         self,
         updates: "dict[str, str] | None" = None,
         removes: "tuple[str, ...] | list[str]" = (),
     ) -> None:
         """Apply a property mutation and re-validate the declared sort
-        order when a declaration-relevant key changed — atomically on
-        the IN-MEMORY handle: on validation failure both the
-        properties dict and the derived metadata revert, so nothing
-        mutates unless the whole change is valid. Does NOT commit (the
-        caller owns the commit boundary)."""
-        prior = self._declaration_snapshot()
+        order when a declaration-relevant key changed. Does NOT commit:
+        callers run it inside a ``_transaction``, whose rollback
+        reverts the properties and the derived metadata together when
+        validation fails."""
         self.meta["properties"].update(updates or {})
         for k in removes:
             self.meta["properties"].pop(k, None)
         touched = set(updates or {}) | set(removes)
         if {"write.sort-order", "write.bucket-layout"} & touched:
-            try:
-                self.refresh_declared_sort_order()
-            except Exception:
-                self._restore_declaration(prior)
-                raise
+            self.refresh_declared_sort_order()
 
     @property
     def partition_spec(self) -> PartitionSpec:
@@ -1597,9 +1664,9 @@ class LakeTable:
                     "compact() first to fold them into data"
                 )
         v = int(self.meta["current_schema_version"]) + 1
-        self.meta["schemas"][str(v)] = json.loads(new_schema.json())
-        self.meta["current_schema_version"] = v
-        self._commit()
+        with self._transaction():
+            self.meta["schemas"][str(v)] = json.loads(new_schema.json())
+            self.meta["current_schema_version"] = v
         return v
 
     def rename_column(self, old: str, new: str) -> int:
@@ -1653,16 +1720,17 @@ class LakeTable:
                 for f in schema.fields
             ]
         )
-        # the log entry and the schema land in ONE commit:
-        # commit_schema persists the whole metadata document
-        self.meta.setdefault("renames", []).append(
-            {
-                "version": int(self.meta["current_schema_version"]) + 1,
-                "from": old,
-                "to": new,
-            }
-        )
-        return self.commit_schema(new_schema)
+        # the log entry and the schema land in ONE commit (the
+        # commit_schema transaction joins this one)
+        with self._transaction():
+            self.meta.setdefault("renames", []).append(
+                {
+                    "version": int(self.meta["current_schema_version"]) + 1,
+                    "from": old,
+                    "to": new,
+                }
+            )
+            return self.commit_schema(new_schema)
 
     def _renames_since(self, schema_version: int) -> dict[str, str]:
         """Composed {name-as-written -> current name} for data files
@@ -1694,9 +1762,9 @@ class LakeTable:
 
     def commit_spec(self, new_spec: PartitionSpec) -> int:
         sid = int(self.meta["current_spec_id"]) + 1
-        self.meta["specs"][str(sid)] = new_spec.to_json()
-        self.meta["current_spec_id"] = sid
-        self._commit()
+        with self._transaction():
+            self.meta["specs"][str(sid)] = new_spec.to_json()
+            self.meta["current_spec_id"] = sid
         return sid
 
     # -- write path --------------------------------------------------------
@@ -2258,59 +2326,74 @@ class LakeTable:
             df, presorted=presorted, lineage_cols=lineage_materialized
         )
         snap_id = rel.rsplit("snap-", 1)[1]
-        seq = int(self.meta.get("last_sequence_number", 0)) + 1
-        self.meta["last_sequence_number"] = seq
         manifest = self._collect_manifest(rel)
-        self._warn_dual_layout_file_product(manifest)
-        if branch is None and (
-            operation in ("append", "overwrite") or lineage_materialized
-        ):
-            # v3 row lineage (a42): plain appends consume the table's
-            # row-id space — each data file records the id of its
-            # first row, ids continue positionally within the file.
-            # Rewrite commits that MATERIALIZED lineage (a43/a45: the
-            # rewrite wrote each surviving row's _row_id /
-            # _last_updated_sequence_number as physical columns) also
-            # consume a fresh block — the spec's inheritance base for
-            # any null-_row_id slots (empty for a pure compaction;
-            # merge inserts use it; readers coalesce materialized over
-            # positional). OVERWRITE assigns a fresh block too (r16):
-            # its rows are new content with no prior identity, exactly
-            # the spec's added-files assignment — so lineage stays
-            # servable across every commit this engine writes. Only a
-            # non-carrying "replace" (compact of a pre-lineage
-            # history) stays unassigned — fresh ids there would claim
-            # identity for rows that HAVE one, just unrecorded.
-            # Branch appends stage unassigned and receive their block
-            # at fast_forward (publish order is what decides it).
-            self._assign_row_ids(manifest)
-        snap = Snapshot(
-            snapshot_id=snap_id,
-            timestamp_ms=int(time.time() * 1000),
-            operation=operation,
-            schema_version=int(self.meta["current_schema_version"]),
-            spec_id=int(self.meta["current_spec_id"]),
-            data_dir=rel,
-            sequence_number=seq,
-            files=manifest,
-        )
-        if branch is not None:
-            self._branch(branch)["snapshots"].append(snap.to_json())
-        elif operation != "append":
-            # rewrite commit (overwrite / replace / delete / update /
-            # merge): old live set moves to history — time travel keeps
-            # working across every rewrite flavor, and committing under
-            # the FINAL label means no crash window can leave a rewrite
-            # durably mislabeled 'overwrite' (the changelog's
-            # emit-nothing-by-'replace'-label optimization depends on
-            # the label surviving)
-            self.meta.setdefault("snapshot_history", []).extend(
-                self.meta["snapshots"]
+        if not manifest:
+            # a partitioned write of zero rows leaves no data file, and
+            # a snapshot dir without one has no schema to scan (every
+            # later to_df fails with UNABLE_TO_INFER_SCHEMA): commit
+            # the one empty file an unpartitioned write leaves instead
+            aligned, _ = self._prepare_write(
+                df, lineage_cols=lineage_materialized
             )
-            self.meta["snapshots"] = [snap.to_json()]
-        else:
-            self.meta["snapshots"].append(snap.to_json())
-        self._commit()
+            aligned.limit(0).write.mode("overwrite").parquet(
+                str(self.location / rel)
+            )
+            manifest = self._collect_manifest(rel)
+        self._warn_dual_layout_file_product(manifest)
+        with self._transaction():
+            seq = int(self.meta.get("last_sequence_number", 0)) + 1
+            self.meta["last_sequence_number"] = seq
+            if branch is None and (
+                operation in ("append", "overwrite") or lineage_materialized
+            ):
+                # v3 row lineage (a42): plain appends consume the
+                # table's row-id space — each data file records the id
+                # of its first row, ids continue positionally within
+                # the file. Rewrite commits that MATERIALIZED lineage
+                # (a43/a45: the rewrite wrote each surviving row's
+                # _row_id / _last_updated_sequence_number as physical
+                # columns) also consume a fresh block — the spec's
+                # inheritance base for any null-_row_id slots (empty
+                # for a pure compaction; merge inserts use it; readers
+                # coalesce materialized over positional). OVERWRITE
+                # assigns a fresh block too (r16): its rows are new
+                # content with no prior identity, exactly the spec's
+                # added-files assignment — so lineage stays servable
+                # across every commit this engine writes. Only a
+                # non-carrying "replace" (compact of a pre-lineage
+                # history) stays unassigned — fresh ids there would
+                # claim identity for rows that HAVE one, just
+                # unrecorded. Branch appends stage unassigned and
+                # receive their block at fast_forward (publish order
+                # is what decides it).
+                self._assign_row_ids(manifest)
+            snap = Snapshot(
+                snapshot_id=snap_id,
+                timestamp_ms=int(time.time() * 1000),
+                operation=operation,
+                schema_version=int(self.meta["current_schema_version"]),
+                spec_id=int(self.meta["current_spec_id"]),
+                data_dir=rel,
+                sequence_number=seq,
+                files=manifest,
+            )
+            if branch is not None:
+                self._branch(branch)["snapshots"].append(snap.to_json())
+            elif operation != "append":
+                # rewrite commit (overwrite / replace / delete / update
+                # / merge): old live set moves to history — time travel
+                # keeps working across every rewrite flavor, and
+                # committing under the FINAL label means no crash
+                # window can leave a rewrite durably mislabeled
+                # 'overwrite' (the changelog's emit-nothing-by-
+                # 'replace'-label optimization depends on the label
+                # surviving)
+                self.meta.setdefault("snapshot_history", []).extend(
+                    self.meta["snapshots"]
+                )
+                self.meta["snapshots"] = [snap.to_json()]
+            else:
+                self.meta["snapshots"].append(snap.to_json())
         return snap
 
     # -- branches (Iceberg branch refs; write-audit-publish) ---------------
@@ -2335,19 +2418,20 @@ class LakeTable:
             raise TableFormatError("'main' is the table itself")
         if name in (self.meta.get("tags") or {}):
             raise TableFormatError(f"ref {name!r} already names a tag")
-        branches = self.meta.setdefault("branches", {})
-        if name in branches:
+        if name in (self.meta.get("branches") or {}):
             raise TableFormatError(f"branch {name!r} already exists")
-        branches[name] = {"snapshots": list(self.meta["snapshots"])}
-        self._commit()
+        with self._transaction():
+            self.meta.setdefault("branches", {})[name] = {
+                "snapshots": list(self.meta["snapshots"])
+            }
 
     def drop_branch(self, name: str) -> None:
         """Abandon a staging branch. Its unpublished snapshot dirs
         become orphans (remove_orphan_files reaps them) — the audit
         failed, nothing was published."""
         self._branch(name)  # raises on unknown
-        del self.meta["branches"][name]
-        self._commit()
+        with self._transaction():
+            del self.meta["branches"][name]
 
     def fast_forward(self, name: str) -> int:
         """Publish a staging branch: main's live list becomes the
@@ -2365,23 +2449,23 @@ class LakeTable:
                 "through a fresh branch)"
             )
         published = len(br_ids) - len(main_ids)
-        # v3 row lineage (a42): branch appends stage WITHOUT row-id
-        # assignments (main's cursor position at publish time is what
-        # decides them — two branches staging concurrently must not
-        # both consume the same block). Assign here, in publish order,
-        # exactly as a direct append would have.
-        cursor = int(self.meta.get("next_row_id", 0))
-        for snap_json in br["snapshots"][len(main_ids):]:
-            if snap_json.get("operation") != "append":
-                continue
-            for f in snap_json.get("files") or []:
-                if f.get("first_row_id") is None:
-                    f["first_row_id"] = cursor
-                    cursor += int(f["record_count"])
-        self.meta["next_row_id"] = cursor
-        self.meta["snapshots"] = br["snapshots"]
-        del self.meta["branches"][name]
-        self._commit()
+        with self._transaction():
+            # v3 row lineage (a42): branch appends stage WITHOUT row-id
+            # assignments (main's cursor position at publish time is
+            # what decides them — two branches staging concurrently
+            # must not both consume the same block). Assign here, in
+            # publish order, exactly as a direct append would have.
+            cursor = int(self.meta.get("next_row_id", 0))
+            for snap_json in br["snapshots"][len(main_ids):]:
+                if snap_json.get("operation") != "append":
+                    continue
+                for f in snap_json.get("files") or []:
+                    if f.get("first_row_id") is None:
+                        f["first_row_id"] = cursor
+                        cursor += int(f["record_count"])
+            self.meta["next_row_id"] = cursor
+            self.meta["snapshots"] = br["snapshots"]
+            del self.meta["branches"][name]
         return published
 
     def _warn_dual_layout_file_product(
@@ -2515,20 +2599,15 @@ class LakeTable:
                 .sort("file_path", "pos")
                 .coalesce(1)
             )
-            import copy  # noqa: PLC0415
-
-            backup = copy.deepcopy(self.meta)
-            try:
-                pos_rel = f"data/pos-{uuid.uuid4().hex[:16]}"
-                matched.write.mode("error").parquet(
-                    str(self.location / pos_rel)
-                )
-                manifest = self._collect_manifest(pos_rel)
-                if self._manifest_rows(manifest) == 0:
-                    self.data_io.delete_recursive(
-                        str(self.location / pos_rel)
-                    )
-                    return None
+            pos_rel = f"data/pos-{uuid.uuid4().hex[:16]}"
+            matched.write.mode("error").parquet(str(self.location / pos_rel))
+            manifest = self._collect_manifest(pos_rel)
+            if self._manifest_rows(manifest) == 0:
+                self.data_io.delete_recursive(str(self.location / pos_rel))
+                return None
+            # a failed commit leaves the written dir an orphan
+            # remove_orphan_files reaps
+            with self._transaction():
                 seq = int(self.meta.get("last_sequence_number", 0)) + 1
                 self.meta["last_sequence_number"] = seq
                 snap = Snapshot(
@@ -2545,34 +2624,17 @@ class LakeTable:
                     files=manifest,
                 )
                 self.meta["snapshots"].append(snap.to_json())
-                self._commit()
-                return snap
-            except Exception:
-                # in-memory meta must never run ahead of disk; the
-                # written dir becomes an orphan remove_orphan_files
-                # reaps (same guard as the other MoR paths)
-                self.meta = backup
-                raise
+            return snap
         if strategy == "merge_on_read":
             self._validate_predicate(spark, condition)
-            import copy  # noqa: PLC0415
-
-            backup = copy.deepcopy(self.meta)
-            try:
+            with self._transaction():
                 seq = int(self.meta.get("last_sequence_number", 0)) + 1
                 self.meta["last_sequence_number"] = seq
                 snap = self._predicate_snapshot(
                     condition, seq, int(time.time() * 1000)
                 )
                 self.meta["snapshots"].append(snap.to_json())
-                self._commit()
-                return snap
-            except Exception:
-                # a failed _commit must not leave in-memory meta ahead
-                # of disk (a retry would double-bump the sequence) —
-                # same guard as update_where's merge-on-read branch
-                self.meta = backup
-                raise
+            return snap
         if strategy != "copy_on_write":
             raise TableFormatError(f"unknown delete strategy {strategy!r}")
         # a45: survivors carry their row lineage through the rewrite
@@ -2625,9 +2687,6 @@ class LakeTable:
                 .filter(self._null_safe(condition))
                 .persist()  # delta-sized; feeds both commits below
             )
-            import copy  # noqa: PLC0415
-
-            backup = copy.deepcopy(self.meta)
             try:
                 pos_rel = f"data/pos-{uuid.uuid4().hex[:16]}"
                 (
@@ -2657,6 +2716,10 @@ class LakeTable:
                     ]
                 )
                 rel = self._write_files(changed)
+                app_manifest = self._collect_manifest(rel)
+            finally:
+                matched.unpersist()
+            with self._transaction():
                 now = int(time.time() * 1000)
                 seq0 = int(self.meta.get("last_sequence_number", 0))
                 del_snap = Snapshot(
@@ -2672,7 +2735,6 @@ class LakeTable:
                     delete_pos_dir=pos_rel,
                     files=pos_manifest,
                 )
-                app_manifest = self._collect_manifest(rel)
                 # r16: the re-appended post-update versions are ADDED
                 # files — they take a fresh id block (spec assignment;
                 # MoR updates give rewritten rows new ids, CoW is the
@@ -2694,13 +2756,7 @@ class LakeTable:
                 self.meta["snapshots"].extend(
                     [del_snap.to_json(), app_snap.to_json()]
                 )
-                self._commit()
-                return app_snap
-            except Exception:
-                self.meta = backup
-                raise
-            finally:
-                matched.unpersist()
+            return app_snap
         if strategy == "merge_on_read":
             self._validate_predicate(spark, condition)
             changed = self.to_df(spark).filter(cond).select(
@@ -2711,27 +2767,21 @@ class LakeTable:
                     for f in self.schema.fields
                 ]
             )
+            rel = self._write_files(changed)
+            manifest = self._collect_manifest(rel)
+            if self._manifest_rows(manifest) == 0:
+                # no row matched: committing the pair anyway would
+                # permanently add one scan-time mask arm (and a
+                # snapshot-log entry) for a no-op. The check is free —
+                # decided from the just-written parquet footers, no
+                # extra Spark action.
+                self.data_io.delete_recursive(str(self.location / rel))
+                return None
             # the pair (predicate mask + post-update rows) shares ONE
             # timestamp and lands in ONE metadata commit, so timestamp
-            # travel can never observe the torn delete-only state; on
-            # any failure the whole in-memory meta reverts (files
-            # already written become reapable orphans)
-            import copy  # noqa: PLC0415
-
-            backup = copy.deepcopy(self.meta)
-            try:
-                rel = self._write_files(changed)
-                manifest = self._collect_manifest(rel)
-                if self._manifest_rows(manifest) == 0:
-                    # no row matched: committing the pair anyway would
-                    # permanently add one scan-time mask arm (and a
-                    # snapshot-log entry) for a no-op. The check is
-                    # free — decided from the just-written parquet
-                    # footers, no extra Spark action.
-                    self.data_io.delete_recursive(
-                        str(self.location / rel)
-                    )
-                    return None
+            # travel can never observe the torn delete-only state (a
+            # failed commit leaves the written dir a reapable orphan)
+            with self._transaction():
                 now = int(time.time() * 1000)
                 seq0 = int(self.meta.get("last_sequence_number", 0))
                 del_snap = self._predicate_snapshot(
@@ -2756,11 +2806,7 @@ class LakeTable:
                 self.meta["snapshots"].extend(
                     [del_snap.to_json(), app_snap.to_json()]
                 )
-                self._commit()
-                return app_snap
-            except Exception:
-                self.meta = backup
-                raise
+            return app_snap
         if strategy != "copy_on_write":
             raise TableFormatError(f"unknown update strategy {strategy!r}")
         df, carry = self._lineage_source(spark)
@@ -3042,50 +3088,66 @@ class LakeTable:
         affected_keys = (
             joined.filter(drop | updated).select(*key_cols).distinct()
         )
-        import copy  # noqa: PLC0415
+        keys_rel = f"data/keys-{uuid.uuid4().hex[:16]}"
+        affected_keys.write.mode("error").parquet(
+            str(self.location / keys_rel)
+        )
+        keys_manifest = self._collect_manifest(keys_rel)
+        keys_df = spark.read.parquet(str(self.location / keys_rel))
+        if (
+            sum(f["size_bytes"] for f in keys_manifest)
+            <= _BROADCAST_KEYFILE_MAX_BYTES
+        ):
+            keys_df = F.broadcast(keys_df)
+        # every matched row sharing an affected key is re-appended
+        # (clause applied; unfired same-key duplicates pass through
+        # unchanged) — the key mask is key-granular and must not lose
+        # rows it masks
+        rewritten = (
+            joined.join(keys_df, key_cols, "left_semi")
+            .filter(~drop)
+            .select(*[col_expr[c].alias(c) for c in cols])
+        )
+        appended = rewritten
+        inserts_aligned = build_inserts()
+        if inserts_aligned is not None:
+            appended = appended.unionByName(inserts_aligned)
+        rel = self._write_files(appended)
+        return self._commit_delete_append(
+            keys_rel,
+            keys_manifest,
+            list(key_cols),
+            rel,
+            self._collect_manifest(rel),
+        )
 
-        backup = copy.deepcopy(self.meta)
-        try:
-            keys_rel = f"data/keys-{uuid.uuid4().hex[:16]}"
-            affected_keys.write.mode("error").parquet(
-                str(self.location / keys_rel)
-            )
-            keys_manifest = self._collect_manifest(keys_rel)
-            keys_df = spark.read.parquet(str(self.location / keys_rel))
-            if (
-                sum(f["size_bytes"] for f in keys_manifest)
-                <= _BROADCAST_KEYFILE_MAX_BYTES
-            ):
-                keys_df = F.broadcast(keys_df)
-            # every matched row sharing an affected key is re-appended
-            # (clause applied; unfired same-key duplicates pass through
-            # unchanged) — the key mask is key-granular and must not
-            # lose rows it masks
-            rewritten = (
-                joined.join(keys_df, key_cols, "left_semi")
-                .filter(~drop)
-                .select(*[col_expr[c].alias(c) for c in cols])
-            )
-            appended = rewritten
-            inserts_aligned = build_inserts()
-            if inserts_aligned is not None:
-                appended = appended.unionByName(inserts_aligned)
-            rel = self._write_files(appended)
-            app_manifest = self._collect_manifest(rel)
-            n_keys = self._manifest_rows(keys_manifest)
-            n_app = self._manifest_rows(app_manifest)
-            if n_keys == 0 and n_app == 0:
-                # all-miss MERGE (no clause fired, nothing to insert):
-                # committing anyway would permanently add one anti-join
-                # mask arm per earlier data snapshot on every future
-                # scan, plus snapshot-log noise, for a no-op. Decided
-                # from the just-written parquet footers — zero extra
-                # Spark actions.
-                self.data_io.delete_recursive(
-                    str(self.location / keys_rel)
-                )
-                self.data_io.delete_recursive(str(self.location / rel))
-                return None
+    def _commit_delete_append(
+        self,
+        keys_rel: str,
+        keys_manifest: list[dict[str, Any]],
+        key_cols: list[str],
+        rel: str,
+        app_manifest: list[dict[str, Any]],
+    ) -> "Snapshot | None":
+        """Commit an equality-delete key file and an append dir as one
+        pair (merge-on-read MERGE, keyed changelog apply). An empty
+        half is deleted and left out (insert-only: a plain append;
+        delete-only: a bare mask). When both are empty — an all-miss
+        MERGE — nothing commits and None is returned: committing would
+        add one anti-join mask arm to every future scan for a no-op.
+        Emptiness comes from the just-written parquet footers, with no
+        extra Spark action. Otherwise returns the last new snapshot; a
+        failed commit leaves the written dirs orphans
+        remove_orphan_files reaps."""
+        n_keys = self._manifest_rows(keys_manifest)
+        n_app = self._manifest_rows(app_manifest)
+        if n_keys == 0:
+            self.data_io.delete_recursive(str(self.location / keys_rel))
+        if n_app == 0:
+            self.data_io.delete_recursive(str(self.location / rel))
+        if n_keys == 0 and n_app == 0:
+            return None
+        with self._transaction():
             now = int(time.time() * 1000)
             seq = int(self.meta.get("last_sequence_number", 0))
             new_snaps: list[Snapshot] = []
@@ -3103,20 +3165,14 @@ class LakeTable:
                         data_dir="",
                         sequence_number=seq,
                         delete_keys_dir=keys_rel,
-                        delete_key_cols=list(key_cols),
+                        delete_key_cols=key_cols,
                         files=keys_manifest,
                     )
-                )
-            else:
-                # insert-only MERGE: no mask needed, plain append
-                self.data_io.delete_recursive(
-                    str(self.location / keys_rel)
                 )
             if n_app > 0:
                 seq += 1
                 # r16: re-appended versions/inserts are ADDED files —
-                # fresh id block (spec assignment; the committed-only
-                # guard keeps next_row_id honest on dropped dirs)
+                # fresh id block (spec assignment)
                 self._assign_row_ids(app_manifest)
                 new_snaps.append(
                     Snapshot(
@@ -3132,19 +3188,9 @@ class LakeTable:
                         files=app_manifest,
                     )
                 )
-            else:
-                # delete-only MERGE (all fired clauses were DELETEs)
-                self.data_io.delete_recursive(str(self.location / rel))
             self.meta["last_sequence_number"] = seq
             self.meta["snapshots"].extend(s.to_json() for s in new_snaps)
-            self._commit()
-            return new_snaps[-1]
-        except Exception:
-            # in-memory meta must never run ahead of disk (a retry
-            # would double-bump the sequence); written dirs become
-            # orphans remove_orphan_files reaps
-            self.meta = backup
-            raise
+        return new_snaps[-1]
 
     def _lineage_source(
         self, spark: SparkSession
@@ -3237,61 +3283,61 @@ class LakeTable:
             raise TableFormatError(
                 "sort_by and cluster_by are mutually exclusive"
             )
-        # snapshot BEFORE any declaration mutation: both the sort_by
-        # declaration below and the cluster_by mutation inside the try
-        # (sets meta['clustering'], pops sort_order + write.sort-order)
-        # revert through this on a failed rewrite — a crash during
-        # _write must not leave an unapplied layout claim for the next
-        # unrelated commit to persist (ADVICE r12 medium finding)
-        declared_prior = self._declaration_snapshot()
-        declared = self.sort_order_fields
-        if not sort_by and not cluster_by and declared:
-            # a plain compact() on a table with a DECLARED sort order
-            # applies it (Iceberg's rewrite_data_files sort strategy
-            # defaults to the table sort order) — maintenance must not
-            # silently destroy the declared layout
-            sort_fields = declared
-        elif sort_by:
-            # an EXPLICIT sort_by (re)declares the table sort order.
-            # Parse + declare UP FRONT — before to_df, the rewrite, or
-            # any other mutation — through the same parser CREATE/SET
-            # use, so transforms ('month(ts)') and direction ('v DESC')
-            # work PHYSICALLY (the parsed fields feed _sort_columns
-            # below) and validation (schema membership, transform
-            # vocabulary, bucket-layout composition rules) fails free
-            # of side effects. Mirroring into write.sort-order keeps
-            # the property document the single source of truth
-            # (SHOW CREATE, export, refresh_declared_sort_order all
-            # read one place). declared_prior (above) ALSO guards
-            # the rewrite below: a compact that declares and then
-            # fails mid-write reverts the in-memory declaration, so a
-            # later unrelated commit can't persist an order the failed
-            # compact never applied (r12 review finding).
-            self.update_properties_validated(
-                updates={"write.sort-order": ", ".join(sort_by)}
-            )
-            sort_fields = self.sort_order_fields
-        else:
-            sort_fields = []
-        # NOTE: when the table declares write.target-file-size-bytes,
-        # the commit below is already size-bounded by _write_files'
-        # maxRecordsPerFile cap — a compaction that would AQE-coalesce a
-        # large live set into one oversized-footer file (the measured 4x
-        # scan hazard, SCALE.md round-9) splits at the target without
-        # the extra shuffle an explicit target_files repartition costs.
-        # target_files stays the explicit COUNT knob for range-prunable
-        # layouts (sort_by/cluster_by want a real range partitioning).
-        # v3 row lineage through rewrites (a43, the spec's `_row_id`
-        # column materialization): when every live data file carries a
-        # commit-time assignment, the rewrite input is lineage_df —
-        # each surviving row's _row_id / _last_updated_sequence_number
-        # ride through the rewrite as PHYSICAL columns in the
-        # compacted files (normal scans align them away; lineage reads
-        # coalesce them over positional derivation). Pre-lineage
-        # histories compact exactly as before (no columns, and
-        # lineage_df keeps refusing on them).
-        carry_lineage = self._lineage_assignable()
-        try:
+        # one transaction from the first declaration mutation to the
+        # rewrite's commit: the sort_by declaration and the cluster_by
+        # layout claim (sets meta['clustering'], pops sort_order +
+        # write.sort-order) land in the rewrite's commit, and a failed
+        # rewrite reverts both — a later unrelated commit can never
+        # persist a layout this compact never applied (ADVICE r12)
+        with self._transaction():
+            declared = self.sort_order_fields
+            if not sort_by and not cluster_by and declared:
+                # a plain compact() on a table with a DECLARED sort
+                # order applies it (Iceberg's rewrite_data_files sort
+                # strategy defaults to the table sort order) —
+                # maintenance must not silently destroy the declared
+                # layout
+                sort_fields = declared
+            elif sort_by:
+                # an EXPLICIT sort_by (re)declares the table sort
+                # order. Parse + declare UP FRONT — before to_df or
+                # the rewrite — through the same parser CREATE/SET
+                # use, so transforms ('month(ts)') and direction
+                # ('v DESC') work PHYSICALLY (the parsed fields feed
+                # _sort_columns below) and validation (schema
+                # membership, transform vocabulary, bucket-layout
+                # composition rules) fails before any data moves.
+                # Mirroring into write.sort-order keeps the property
+                # document the single source of truth (SHOW CREATE,
+                # export, refresh_declared_sort_order all read one
+                # place).
+                self.update_properties_validated(
+                    updates={"write.sort-order": ", ".join(sort_by)}
+                )
+                sort_fields = self.sort_order_fields
+            else:
+                sort_fields = []
+            # NOTE: when the table declares
+            # write.target-file-size-bytes, the commit below is
+            # already size-bounded by _write_files' maxRecordsPerFile
+            # cap — a compaction that would AQE-coalesce a large live
+            # set into one oversized-footer file (the measured 4x scan
+            # hazard, SCALE.md round-9) splits at the target without
+            # the extra shuffle an explicit target_files repartition
+            # costs. target_files stays the explicit COUNT knob for
+            # range-prunable layouts (sort_by/cluster_by want a real
+            # range partitioning).
+            # v3 row lineage through rewrites (a43, the spec's
+            # `_row_id` column materialization): when every live data
+            # file carries a commit-time assignment, the rewrite input
+            # is lineage_df — each surviving row's _row_id /
+            # _last_updated_sequence_number ride through the rewrite
+            # as PHYSICAL columns in the compacted files (normal scans
+            # align them away; lineage reads coalesce them over
+            # positional derivation). Pre-lineage histories compact
+            # exactly as before (no columns, and lineage_df keeps
+            # refusing on them).
+            carry_lineage = self._lineage_assignable()
             df = (
                 self.lineage_df(spark)
                 if carry_lineage
@@ -3323,12 +3369,12 @@ class LakeTable:
                 df = df.repartition(target_files)
             # label: compaction is logically content-preserving, which
             # is exactly Iceberg's 'replace' snapshot summary (REPLACE
-            # ops emit nothing in a changelog scan; a plain 'overwrite'
-            # would force changelog_between into a full adjacent-state
-            # diff to prove the zero delta it can have by label).
-            # Layout metadata mutates BEFORE _write so the label,
-            # layout, and rewrite land in ONE commit — no crash window
-            # can leave a durable 'overwrite'.
+            # ops emit nothing in a changelog scan; a plain
+            # 'overwrite' would force changelog_between into a full
+            # adjacent-state diff to prove the zero delta it can have
+            # by label). Layout metadata mutates BEFORE _write so the
+            # label, layout, and rewrite land in ONE commit — no crash
+            # window can leave a durable 'overwrite'.
             if cluster_by:
                 self.meta["clustering"] = list(cluster_by)
                 self.meta.pop("sort_order", None)
@@ -3339,18 +3385,6 @@ class LakeTable:
                 presorted=True,
                 lineage_materialized=carry_lineage,
             )  # moves old live to history
-        except Exception:
-            if sort_by or cluster_by:
-                # the rewrite failed after the declaration/layout
-                # mutation: revert the in-memory handle so a later
-                # unrelated commit cannot persist a layout this
-                # compact never applied (nothing durable happened —
-                # _write commits metadata only after the data write
-                # succeeds). Covers BOTH halves of a z-order compact:
-                # the minted clustering claim and the destroyed
-                # sort-order declaration (ADVICE r12 medium finding).
-                self._restore_declaration(declared_prior)
-            raise
 
     def compact_position_deletes(self, spark: SparkSession) -> "Snapshot | None":
         """Iceberg ``rewrite_position_delete_files`` analog: merge ALL
@@ -3374,15 +3408,12 @@ class LakeTable:
         merged = spark.read.parquet(
             *[str(self.location / s.delete_pos_dir) for s in pos_snaps]
         ).dropDuplicates(["file_path", "pos"]).sort("file_path", "pos")
-        import copy  # noqa: PLC0415
-
-        backup = copy.deepcopy(self.meta)
-        try:
-            pos_rel = f"data/pos-{uuid.uuid4().hex[:16]}"
-            merged.coalesce(1).write.mode("error").parquet(
-                str(self.location / pos_rel)
-            )
-            manifest = self._collect_manifest(pos_rel)
+        pos_rel = f"data/pos-{uuid.uuid4().hex[:16]}"
+        merged.coalesce(1).write.mode("error").parquet(
+            str(self.location / pos_rel)
+        )
+        manifest = self._collect_manifest(pos_rel)
+        with self._transaction():
             seq = int(self.meta.get("last_sequence_number", 0)) + 1
             self.meta["last_sequence_number"] = seq
             snap = Snapshot(
@@ -3409,11 +3440,7 @@ class LakeTable:
                 if s["snapshot_id"] not in merged_ids
             ]
             self.meta["snapshots"].append(snap.to_json())
-            self._commit()
-            return snap
-        except Exception:
-            self.meta = backup
-            raise
+        return snap
 
     def rewrite_manifests(self) -> "Snapshot | None":
         """Iceberg ``rewrite_manifests`` analog: fold the LIVE
@@ -3458,14 +3485,7 @@ class LakeTable:
                 # pre-manifest metadata: collect the stats pass the
                 # original commit predates (footer-priced, once)
                 union.extend(self._collect_manifest(s.data_dir))
-        import copy  # noqa: PLC0415
-
-        # same poisoned-handle guard as compact_position_deletes: a
-        # failed commit must not leave the in-memory handle carrying a
-        # phantom fold a retry (or the next unrelated commit) would
-        # publish on top of (r13 review finding)
-        backup = copy.deepcopy(self.meta)
-        try:
+        with self._transaction():
             seq = int(self.meta.get("last_sequence_number", 0)) + 1
             self.meta["last_sequence_number"] = seq
             snap = Snapshot(
@@ -3483,11 +3503,7 @@ class LakeTable:
                 self.meta["snapshots"]
             )
             self.meta["snapshots"] = [snap.to_json()]
-            self._commit()
-            return snap
-        except Exception:
-            self.meta = backup
-            raise
+        return snap
 
     def add_files(self, source_dir: "str | Path") -> Snapshot:
         """Iceberg ``system.add_files`` analog: import EXISTING
@@ -3615,19 +3631,14 @@ class LakeTable:
         dst.mkdir(parents=True)
         for i, p in enumerate(files):
             shutil.copy2(p, dst / f"imported-{i:05d}-{p.name}")
-        import copy  # noqa: PLC0415
-
-        # poisoned-handle guard (same as compact_position_deletes): a
-        # failed commit must revert the in-memory snapshot append, or
-        # an add_files retry would publish the phantom AND the retry's
-        # copy — double-importing every row. The copied dir becomes an
-        # orphan remove_orphan_files reaps (r13 review finding).
-        backup = copy.deepcopy(self.meta)
-        try:
+        manifest = self._collect_manifest(rel)
+        # a failed commit reverts the in-memory snapshot append (else
+        # a retry would publish the phantom AND the retry's copy) and
+        # leaves the copied dir an orphan remove_orphan_files reaps
+        with self._transaction():
             snap_id = rel.rsplit("snap-", 1)[1]
             seq = int(self.meta.get("last_sequence_number", 0)) + 1
             self.meta["last_sequence_number"] = seq
-            manifest = self._collect_manifest(rel)
             # add_files IS an append of new rows: it consumes row-id
             # space like any append (r15 review: forgetting this
             # forfeited lineage for the whole table and blamed
@@ -3644,11 +3655,7 @@ class LakeTable:
                 files=manifest,
             )
             self.meta["snapshots"].append(snap.to_json())
-            self._commit()
-            return snap
-        except Exception:
-            self.meta = backup
-            raise
+        return snap
 
     # -- snapshot tags (Iceberg refs, tag type) ----------------------------
 
@@ -3679,8 +3686,7 @@ class LakeTable:
             raise TableFormatError(
                 f"ref {name!r} already names a branch"
             )
-        tags = self.meta.setdefault("tags", {})
-        if name in tags:
+        if name in self.tags:
             raise TableFormatError(
                 f"tag {name!r} already exists (drop_tag first)"
             )
@@ -3700,15 +3706,14 @@ class LakeTable:
             raise TableFormatError(
                 f"cannot tag expired snapshot {snapshot_id!r}"
             )
-        tags[name] = snapshot_id
-        self._commit()
+        with self._transaction():
+            self.meta.setdefault("tags", {})[name] = snapshot_id
 
     def drop_tag(self, name: str) -> None:
-        tags = self.meta.get("tags") or {}
-        if name not in tags:
+        if name not in self.tags:
             raise TableFormatError(f"unknown tag {name!r}")
-        del tags[name]
-        self._commit()
+        with self._transaction():
+            del self.meta["tags"][name]
 
     def refs_df(self, spark: SparkSession) -> DataFrame:
         """The ref inventory (Iceberg's ``db.tbl.refs`` metadata
@@ -3794,64 +3799,61 @@ class LakeTable:
         if not expired_now:
             return []
         expired_ids = {s.snapshot_id for s in expired_now}
-        for s in self.meta.get("snapshot_history", []):
-            if s["snapshot_id"] in expired_ids:
-                s["expired"] = True
-        # A retained snapshot's state is the union of its segment's
-        # ancestors (log-structured format) — data dirs AND predicate
-        # deletes alike: compute every snapshot ID some retained
-        # snapshot still needs; tombstoned ancestors inside a retained
-        # lineage stay (a dropped interior predicate delete would
-        # RESURRECT its deleted rows in later reads), fully-unneeded
-        # ones are dropped outright and their dirs deleted.
-        chain = self.all_snapshots()
-        by_id = {s.snapshot_id: s for s in chain}
-        needed_ids: set[str] = set()
-        seg: list[Snapshot] = []
-        for s in chain:
-            # rewrites (overwrite/compact/copy-on-write DML) start a
-            # fresh lineage segment; predicate deletes compose inside
-            # it (same fold as _segment_ending_at)
-            seg = [s] if s.is_rewrite else seg + [s]
-            if not s.expired:
-                for x in seg:
-                    needed_ids.add(x.snapshot_id)
-                    # a manifest rewrite (rewrite_manifests) DEPENDS on
-                    # its source snapshots' dirs — unlike a data
-                    # rewrite, it never copied the bytes. Keep the
-                    # whole source closure or the dir delete below
-                    # destroys live data.
-                    needed_ids.update(
-                        y.snapshot_id
-                        for y in self._expand_manifest_sources(x, by_id)
-                    )
-        drop = [
-            s
-            for s in self.meta.get("snapshot_history", [])
-            if s.get("expired") and s["snapshot_id"] not in needed_ids
-        ]
-        drop_ids = {s["snapshot_id"] for s in drop}
-        self.meta["snapshot_history"] = [
-            s
-            for s in self.meta.get("snapshot_history", [])
-            if s["snapshot_id"] not in drop_ids
-        ]
-        self._commit()  # metadata first: a crash leaves orphans, not
+        # metadata first, dirs after: a crash leaves orphans, not
         # dangling references (remove_orphan_files reaps them)
-        for s in drop:
-            if s["data_dir"]:  # predicate deletes carry no dir
-                self.data_io.delete_recursive(
-                    str(self.location / s["data_dir"])
-                )
-            if s.get("delete_keys_dir"):  # equality-delete key files
-                self.data_io.delete_recursive(
-                    str(self.location / s["delete_keys_dir"])
-                )
-            if s.get("delete_pos_dir"):  # position-delete files
-                self.data_io.delete_recursive(
-                    str(self.location / s["delete_pos_dir"])
-                )
+        with self._transaction():
+            for s in self.meta.get("snapshot_history", []):
+                if s["snapshot_id"] in expired_ids:
+                    s["expired"] = True
+            # A retained snapshot's state is the union of its segment's
+            # ancestors (log-structured format) — data dirs AND predicate
+            # deletes alike: compute every snapshot ID some retained
+            # snapshot still needs; tombstoned ancestors inside a retained
+            # lineage stay (a dropped interior predicate delete would
+            # RESURRECT its deleted rows in later reads), fully-unneeded
+            # ones are dropped outright and their dirs deleted.
+            chain = self.all_snapshots()
+            by_id = {s.snapshot_id: s for s in chain}
+            needed_ids: set[str] = set()
+            seg: list[Snapshot] = []
+            for s in chain:
+                # rewrites (overwrite/compact/copy-on-write DML) start a
+                # fresh lineage segment; predicate deletes compose inside
+                # it (same fold as _segment_ending_at)
+                seg = [s] if s.is_rewrite else seg + [s]
+                if not s.expired:
+                    for x in seg:
+                        needed_ids.add(x.snapshot_id)
+                        # a manifest rewrite (rewrite_manifests) DEPENDS on
+                        # its source snapshots' dirs — unlike a data
+                        # rewrite, it never copied the bytes. Keep the
+                        # whole source closure or the dir delete below
+                        # destroys live data.
+                        needed_ids.update(
+                            y.snapshot_id
+                            for y in self._expand_manifest_sources(x, by_id)
+                        )
+            drop = [
+                s
+                for s in self.meta.get("snapshot_history", [])
+                if s.get("expired") and s["snapshot_id"] not in needed_ids
+            ]
+            drop_ids = {s["snapshot_id"] for s in drop}
+            self.meta["snapshot_history"] = [
+                s
+                for s in self.meta.get("snapshot_history", [])
+                if s["snapshot_id"] not in drop_ids
+            ]
+        self._delete_dirs(Snapshot.from_json(s) for s in drop)
         return sorted(expired_ids)
+
+    def _delete_dirs(self, snaps) -> None:
+        """Delete the data, equality-key and position-delete dirs of
+        snapshots the committed metadata no longer references."""
+        for s in snaps:
+            for rel in (s.data_dir, s.delete_keys_dir, s.delete_pos_dir):
+                if rel:  # predicate deletes carry no dir
+                    self.data_io.delete_recursive(str(self.location / rel))
 
     def remove_orphan_files(self) -> list[str]:
         """Iceberg ``remove_orphan_files`` analog: delete
@@ -4120,27 +4122,15 @@ class LakeTable:
         live_ids = {x.snapshot_id for x in seg}
         # restored segment becomes live; earlier intact segments stay
         # in history; the abandoned fork (> target) is dropped outright
-        self.meta["snapshot_history"] = [
-            s
-            for s in self.meta.get("snapshot_history", [])
-            if s["snapshot_id"] not in live_ids
-            and Snapshot.from_json(s).sequence_number <= target_seq
-        ]
-        self.meta["snapshots"] = [x.to_json() for x in seg]
-        self._commit()
-        for s in displaced:
-            if s.data_dir:  # predicate-delete snapshots carry no dir
-                self.data_io.delete_recursive(
-                    str(self.location / s.data_dir)
-                )
-            if s.delete_keys_dir:  # equality-delete key files
-                self.data_io.delete_recursive(
-                    str(self.location / s.delete_keys_dir)
-                )
-            if s.delete_pos_dir:  # position-delete files
-                self.data_io.delete_recursive(
-                    str(self.location / s.delete_pos_dir)
-                )
+        with self._transaction():
+            self.meta["snapshot_history"] = [
+                s
+                for s in self.meta.get("snapshot_history", [])
+                if s["snapshot_id"] not in live_ids
+                and Snapshot.from_json(s).sequence_number <= target_seq
+            ]
+            self.meta["snapshots"] = [x.to_json() for x in seg]
+        self._delete_dirs(displaced)
 
     # -- metadata tables (Iceberg's db.tbl.snapshots / db.tbl.files) -------
 
@@ -4714,6 +4704,12 @@ class LakeTable:
                 if pruning and s.files is not None:
 
                     def _keep(f: dict) -> bool:
+                        if f["record_count"] == 0:
+                            # no row can match (Iceberg's metrics
+                            # evaluator rule) — e.g. the schema-only
+                            # file of an empty write, which carries
+                            # no partition values to prune on
+                            return False
                         for (col, op, lit) in pruning:
                             if not _file_may_match(
                                 f.get("stats") or {}, col, op, lit
@@ -5481,78 +5477,19 @@ class LakeTable:
             )
             .select(*names)
         )
-        import copy  # noqa: PLC0415
-
-        backup = copy.deepcopy(self.meta)
-        try:
-            keys_rel = f"data/keys-{uuid.uuid4().hex[:16]}"
-            dels.select(*key_cols).distinct().write.mode("error").parquet(
-                str(self.location / keys_rel)
-            )
-            keys_manifest = self._collect_manifest(keys_rel)
-            rel = self._write_files(ins_net)
-            app_manifest = self._collect_manifest(rel)
-            n_keys = self._manifest_rows(keys_manifest)
-            n_app = self._manifest_rows(app_manifest)
-            if n_keys == 0 and n_app == 0:
-                self.data_io.delete_recursive(str(self.location / keys_rel))
-                self.data_io.delete_recursive(str(self.location / rel))
-                return None
-            now = int(time.time() * 1000)
-            seq = int(self.meta.get("last_sequence_number", 0))
-            new_snaps: list[Snapshot] = []
-            if n_keys > 0:
-                seq += 1
-                new_snaps.append(
-                    Snapshot(
-                        snapshot_id=uuid.uuid4().hex[:16],
-                        timestamp_ms=now,
-                        operation="delete",
-                        schema_version=int(
-                            self.meta["current_schema_version"]
-                        ),
-                        spec_id=int(self.meta["current_spec_id"]),
-                        data_dir="",
-                        sequence_number=seq,
-                        delete_keys_dir=keys_rel,
-                        delete_key_cols=list(key_cols),
-                        files=keys_manifest,
-                    )
-                )
-            else:
-                self.data_io.delete_recursive(str(self.location / keys_rel))
-            if n_app > 0:
-                seq += 1
-                # r16: re-appended versions/inserts are ADDED files —
-                # fresh id block (spec assignment; the committed-only
-                # guard keeps next_row_id honest on dropped dirs)
-                self._assign_row_ids(app_manifest)
-                new_snaps.append(
-                    Snapshot(
-                        snapshot_id=rel.rsplit("snap-", 1)[1],
-                        timestamp_ms=now,
-                        operation="append",
-                        schema_version=int(
-                            self.meta["current_schema_version"]
-                        ),
-                        spec_id=int(self.meta["current_spec_id"]),
-                        data_dir=rel,
-                        sequence_number=seq,
-                        files=app_manifest,
-                    )
-                )
-            else:
-                self.data_io.delete_recursive(str(self.location / rel))
-            self.meta["last_sequence_number"] = seq
-            self.meta["snapshots"].extend(s.to_json() for s in new_snaps)
-            self._commit()
-            return new_snaps[-1]
-        except Exception:
-            # in-memory meta must never run ahead of disk (same guard
-            # as _merge_on_read); written dirs become orphans
-            # remove_orphan_files reaps
-            self.meta = backup
-            raise
+        keys_rel = f"data/keys-{uuid.uuid4().hex[:16]}"
+        dels.select(*key_cols).distinct().write.mode("error").parquet(
+            str(self.location / keys_rel)
+        )
+        keys_manifest = self._collect_manifest(keys_rel)
+        rel = self._write_files(ins_net)
+        return self._commit_delete_append(
+            keys_rel,
+            keys_manifest,
+            list(key_cols),
+            rel,
+            self._collect_manifest(rel),
+        )
 
 
 def scd2_history(changelog: DataFrame, key_cols: list[str]) -> DataFrame:

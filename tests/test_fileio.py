@@ -114,6 +114,24 @@ def test_catalog_metadata_contract(catalog, tmp_path):
         assert not (tmp_path / "mem_wh").exists()
 
 
+def test_create_text_is_exclusive(catalog):
+    """The metadata commit's conflict check, on every backend: the
+    first create of a path wins; a second raises FileExistsError and
+    leaves the first writer's bytes in place."""
+    import os  # noqa: PLC0415
+
+    io = catalog.io
+    meta_dir = str(catalog.warehouse / "db" / "t" / "_meta")
+    path = io.join(meta_dir, "v2.metadata.json")
+    io.create_text(path, "first")
+    with pytest.raises(FileExistsError):
+        io.create_text(path, "second")
+    assert io.read_text(path) == "first"
+    if isinstance(io, LocalFileIO):
+        # the staged temp file never outlives the create
+        assert os.listdir(meta_dir) == ["v2.metadata.json"]
+
+
 def test_memory_io_blob_semantics():
     io = InMemoryFileIO()
     io.write_text("/a/b/c.txt", "x")
