@@ -144,10 +144,14 @@ def _box_state(drift: float, floor: float, steal_pct: float) -> tuple[bool, bool
 # labeled honestly either way, and every attempt's box state is kept
 # in the record. Retrying a congested draw is a measurement-validity
 # fix, not a cherry-pick: the attempt to keep is decided by box
-# weather alone, never by the resulting numbers.
-STEAL_RETRY_ATTEMPTS = max(
-    1, int(os.environ.get("SPARK_GRAFT_BENCH_STEAL_RETRIES", "3"))
-)
+# weather alone, never by the resulting numbers. A malformed setting
+# falls back to the default instead of crashing the bench at import.
+try:
+    STEAL_RETRY_ATTEMPTS = max(
+        1, int(os.environ.get("SPARK_GRAFT_BENCH_STEAL_RETRIES", "3"))
+    )
+except ValueError:
+    STEAL_RETRY_ATTEMPTS = 3
 
 
 def _measure_spark(spark, sf_dir: str, runs: int):
@@ -257,7 +261,7 @@ def main() -> None:
     # measured passes of a query run back-to-back, not interleaved with
     # 16 other queries — measured on this box, interleaving inflates
     # per-query medians ~40% (cache/JIT/cleaner cross-talk between
-    # plans; see tools/aqe_experiment.py, which first quantified it).
+    # plans; first quantified in r8, commit 52bcc35).
     # Steal-gated bounded retry (VERDICT r16 item 1): a congested
     # attempt re-draws, keeping the LAST attempt and every attempt's
     # box state. drift/floor/steal thresholds documented at _box_state;

@@ -174,9 +174,20 @@ def asof_join(left, right, on, left_time: str, right_time: str,
             "all left columns and appends the right payload)"
         )
     lt = left.select("*", F.lit(1).alias("__side"))
+    # the right's key/time take the LEFT's types before the union, so
+    # unionByName cannot widen the output's left columns (an int key
+    # meeting a bigint one would widen to bigint). A right key outside the
+    # left key's type equals no left key: its row is dropped before the
+    # cast, never turned into a NULL key. __rt keeps the right's own
+    # type for the tolerance check.
+    ktype = left.schema[lkey].dataType
+    if right.schema[rkey].dataType != ktype:
+        right = right.filter(
+            F.col(rkey).isNull() | F.col(rkey).try_cast(ktype).isNotNull()
+        )
     rt = right.select(
-        F.col(rkey).alias(lkey),
-        F.col(right_time).alias(left_time),
+        F.col(rkey).cast(ktype).alias(lkey),
+        F.col(right_time).cast(left.schema[left_time].dataType).alias(left_time),
         F.lit(0).alias("__side"),
         F.struct(
             F.col(right_time).alias("__rt"), *[F.col(c) for c in payload]

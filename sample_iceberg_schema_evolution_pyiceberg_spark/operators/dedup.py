@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import MINHASH_PRIME, md5_hash60, word_ngrams, words
+from ..session import heavy_input
 from .registry import query, t
 
 N_PERM = 32  # minhash permutations
@@ -300,9 +301,7 @@ def _jaccard_pairs(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
             ).alias("doc_b"),
         )
     )
-    from ..session import heavy_input  # noqa: PLC0415
-
-    if heavy_input():
+    if heavy_input(sf):
         # r17 (guide §2.5/§5): the pair stream is near-unique on
         # (doc_a, doc_b) — measured at sf1: 85.2M generated rows,
         # 71.5M distinct pairs (multiplicity 1.19) — so the partial
@@ -346,7 +345,7 @@ def minhash_signatures(grams: DataFrame) -> DataFrame:
     # The 32 permutation mins are built as parsed expression strings —
     # one py4j round trip each instead of ~6 Column-operator calls each
     # (measured 0.21 s -> ~0.03 s of per-query plan construction,
-    # tools/floor_profile.py r8); the projected `h` alias keeps the
+    # r8, commit 0614a08); the projected `h` alias keeps the
     # md5 hash evaluated once per gram, not once per permutation.
     h = md5_hash60("gram") % MINHASH_PRIME
     pre = grams.select("doc_id", h.alias("h"))
@@ -512,7 +511,7 @@ def c02_dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     )
     # persisted for the same reason: ds is both join sides below, and
     # it is candidate-sized (only docs that survived LSH banding)
-    # ds persist is INPUT-SCALED (session.heavy_input): at sf1 the
+    # ds persist is INPUT-SCALED (heavy_input(sf)): at sf1 the
     # cache wins 1.5x end-to-end (4.5 s vs 7.0 s full pass — without
     # it the semi-join + collect_set fold runs once per join arm), but
     # at gate scale the persist/evict bookkeeping costs more than the
@@ -524,10 +523,8 @@ def c02_dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.collect_set("gd").alias("grams"))
     )
-    from ..session import heavy_input  # noqa: PLC0415
-
     owned = [cand]
-    if heavy_input():
+    if heavy_input(sf):
         ds = ds.persist()
         owned.append(ds)
     a = ds.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"))

@@ -417,7 +417,11 @@ def c13b_dedup_lsh_gated_cosine(spark: SparkSession, sf: str) -> DataFrame:
     At 100 TB: (table_id, bucket) is the shuffle key; embeddings ride
     the posting lists (the on-disk layout real vector indexes use), so
     the verify is map-side within each bucket partition — no second
-    corpus join to re-fetch vectors.
+    corpus join to re-fetch vectors. The bound that comes with it:
+    8 tables x 3-bit buckets is at most 64 fold groups, each carrying
+    about N/8 full embeddings (every vector once per table, so the
+    fold exchange moves 8N embeddings), and the pair work per group is
+    quadratic in its size.
 
     Banding is 8 tables x 3 bits (vs c06's 4x4): the 0.3-cosine target
     is a wide-angle pair (~73°, per-table collision 0.597^3≈0.21), so
@@ -432,9 +436,10 @@ def c13b_dedup_lsh_gated_cosine(spark: SparkSession, sf: str) -> DataFrame:
     two join arms. Additionally the cosine is scored and thresholded
     INSIDE the per-bucket pair stream (map-side after the fold), so
     the cross-table dedup shuffles only the surviving
-    (vec_a, vec_b, cos) scalars — never embeddings (guide §2.3:
-    shuffle decisions, not payloads). Same pairs, same arithmetic,
-    same values."""
+    (vec_a, vec_b, cos) scalars (guide §2.3: shuffle decisions, not
+    payloads). Embeddings do ride the fold exchange above; only this
+    dedup exchange is scalar-only. Same pairs, same arithmetic, same
+    values."""
     buckets = lsh_buckets_udf(n_tables=8, bits=3, seed=31)
     e = t(spark, sf, "embeddings").withColumn("buckets", buckets("embedding"))
     tb = e.select(

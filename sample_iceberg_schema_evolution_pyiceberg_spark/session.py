@@ -9,6 +9,7 @@ parquet naive timestamps round-trip unchanged (DuckDB-oracle parity).
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 
@@ -23,15 +24,17 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # gate-scale input wants a handful — scheduling 32 reducers for it
 # makes every map task write 32 shuffle buckets (map x reduce block
 # overhead measured 2.4x on a 150k-row groupBy: 0.385 s at 32x32 vs
-# 0.163 s at 32x4, tools/floor_profile.py r8). AQE can only MERGE
-# partitions (the blocks are already written map-side), so the initial
-# number is the lever; AQE skew-join still SPLITS oversized partitions,
-# so a low initial count cannot wedge a skewed join. The 2 MB constant
-# is the measured optimum on this box (headline subset at sf0.1:
-# 32 partitions 3.44 s, 4 -> 2.68 s, 8 -> 2.39 s, 12 -> 2.60 s; 18 MB
-# input / 8 ~= 2 MB per partition); a cluster deployment overrides via
-# SPARK_GRAFT_SHUFFLE_PARTITIONS with its own per-partition target.
+# 0.163 s at 32x4, SCALE.md "Round-8: the sf0.1 gate"). AQE can only
+# MERGE partitions (the blocks are already written map-side), so the
+# initial number is the lever; AQE skew-join still SPLITS oversized
+# partitions, so a low initial count cannot wedge a skewed join. The
+# 2 MB constant is the measured optimum on this box (headline subset
+# at sf0.1: 32 partitions 3.44 s, 4 -> 2.68 s, 8 -> 2.39 s, 12 ->
+# 2.60 s; 18 MB input / 8 ~= 2 MB per partition); a cluster deployment
+# passes its own ``shuffle_partitions`` to get_spark. The AQE
+# advisory partition size mirrors the same target.
 _SHUFFLE_TARGET_BYTES = 2 * 1024 * 1024
+_ADVISORY_PARTITION_BYTES = "2m"
 _MIN_SHUFFLE_PARTITIONS = 4
 
 
@@ -45,15 +48,19 @@ def scaled_shuffle_partitions(input_bytes: int, cpus: int) -> int:
     )
 
 
-def _dir_input_bytes(sf_dir: str) -> int:
-    """Total bytes of the declared input dir. Tables may be single
-    files (table.parquet), chunked directories (table.parquet/
-    part-*.parquet — the large derived decades), or hive-partitioned
-    trees (arbitrary depth); os.walk counts them all, else a chunked
-    39 GB lineitem would size the session as a 0-byte input. OSErrors
-    are scoped per entry — one unreadable file skips that file, not
-    the whole estimate (a zeroed estimate silently mis-sizes every
-    shuffle in the session)."""
+@functools.cache
+def input_bytes(sf_dir: str | None) -> int:
+    """Total bytes under an input dir, 0 for none or a missing one.
+    Tables may be single files (table.parquet), chunked directories
+    (table.parquet/part-*.parquet — the large derived decades), or
+    hive-partitioned trees (arbitrary depth); os.walk counts them all,
+    else a chunked 39 GB lineitem would size as a 0-byte input.
+    OSErrors are scoped per entry — one unreadable file skips that
+    file, not the whole estimate (a zeroed estimate silently mis-sizes
+    every shuffle). Memoized per path: inputs are immutable once
+    written, the same assumption sources.load_table's memo makes."""
+    if not sf_dir:
+        return 0
     total = 0
     for dirpath, _dirs, files in os.walk(sf_dir, onerror=lambda e: None):
         for f in files:
@@ -64,48 +71,30 @@ def _dir_input_bytes(sf_dir: str) -> int:
     return total
 
 
-# Below this much declared input, AQE is overhead with nothing to
-# adapt: every exchange becomes its own job boundary (a query-shape
-# stage materialization + re-plan round trip), measured +30% wall on
-# the fixed-cost-dominated headline queries at sf0.1 (1.083 s AQE-on
-# vs 0.753 s off over b16/b18/b42/c01/c05; tools/aqe_experiment.py,
-# r10). Partitions are already input-sized (scaled_shuffle_partitions:
-# a 17 MB input runs 8 x 2 MB partitions), so coalescing has nothing
-# to merge and a skewed key cannot materialize. Any real input — a
-# cluster decade, 100 TB — keeps AQE on: skew-join splitting and
-# runtime coalescing are strictly worth it there. Override with
-# SPARK_GRAFT_AQE=true|false.
-_AQE_MIN_INPUT_BYTES = 64 * 1024 * 1024
+# Below this much input, AQE is overhead with nothing to adapt: every
+# exchange becomes its own job boundary (a query-shape stage
+# materialization + re-plan round trip), measured +30% wall on the
+# fixed-cost-dominated headline queries at sf0.1 (1.083 s AQE-on vs
+# 0.753 s off over b16/b18/b42/c01/c05; commit d2f5277, SURVEY.md
+# "Round 10 status"). Partitions are already input-sized
+# (scaled_shuffle_partitions: a 17 MB input runs 8 x 2 MB partitions),
+# so coalescing has nothing to merge and a skewed key cannot
+# materialize. Any real input — a cluster decade, 100 TB — keeps AQE
+# on: skew-join splitting and runtime coalescing are strictly worth it
+# there. The same bound gates memory-for-recompute trades inside
+# queries (c02's ds persist, c04's pair repartition).
+_HEAVY_INPUT_BYTES = 64 * 1024 * 1024
 
 
-def adaptive_enabled(input_bytes: int) -> bool:
-    """Input-sized AQE gate: off below 64 MB declared input (see
-    _AQE_MIN_INPUT_BYTES rationale), on for anything real."""
-    forced = os.environ.get("SPARK_GRAFT_AQE")
-    if forced:
-        return forced.lower() == "true"
-    return input_bytes >= _AQE_MIN_INPUT_BYTES
-
-
-def declared_input_bytes() -> int:
-    """Bytes of the driver-declared input dir (SPARK_GRAFT_SF_DIR), or
-    0 when none is declared — the shared basis for every input-scaled
-    session decision (shuffle partition count, AQE gate)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
-    return _dir_input_bytes(sf_dir) if sf_dir else 0
-
-
-def heavy_input(threshold: int = _AQE_MIN_INPUT_BYTES) -> bool:
-    """True when the declared input is big enough that memory-for-
-    recompute trades (persisting a mid-query intermediate) pay for
-    themselves (r16: c02's candidate-gram-set cache wins 1.5x at sf1
-    but costs more than the recompute at gate scale, where the
-    persist/evict bookkeeping dominates). Same 64 MB basis as the AQE
-    gate; no declared input -> True (the safe at-scale default)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
-    if not sf_dir:
-        return True
-    return _dir_input_bytes(sf_dir) >= threshold
+def heavy_input(sf_dir: str | None) -> bool:
+    """True when ``sf_dir`` holds at least 64 MB, or when its size is
+    unknown (no dir, empty or missing: the safe at-scale default).
+    Heavy inputs get AQE and the memory-for-recompute trades that pay
+    for themselves only at scale (r16: c02's candidate-gram-set cache
+    wins 1.5x at sf1 but costs more than the recompute at gate scale,
+    where the persist/evict bookkeeping dominates)."""
+    nbytes = input_bytes(sf_dir)
+    return nbytes == 0 or nbytes >= _HEAVY_INPUT_BYTES
 
 
 def parse_mem_bytes(mem: str) -> int:
@@ -147,15 +136,13 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", 0)
-    )
-    nbytes = declared_input_bytes()
-    if not shuffle:
-        # no explicit setting: size to the declared input when the
-        # driver contract names one (bench/driver set
-        # SPARK_GRAFT_SF_DIR), else the static default
-        shuffle = (
+    # session-wide decisions follow the declared deployment input
+    # (bench/driver set SPARK_GRAFT_SF_DIR); none declared -> the
+    # static partition default and AQE on (the safe default)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    nbytes = input_bytes(sf_dir)
+    if not shuffle_partitions:
+        shuffle_partitions = (
             scaled_shuffle_partitions(nbytes, int(cpus))
             if nbytes
             else DEFAULT_SHUFFLE_PARTITIONS
@@ -163,25 +150,24 @@ def get_spark(
     # AQE is input-sized too: on for any real input (100 TB posture —
     # skew-join splits, runtime coalescing), off below 64 MB where its
     # per-exchange re-plan round trip is pure fixed cost (see
-    # adaptive_enabled). No declared input -> on (the safe default).
-    aqe = str(adaptive_enabled(nbytes) if nbytes else True).lower()
+    # _HEAVY_INPUT_BYTES)
+    aqe = str(heavy_input(sf_dir)).lower()
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", aqe)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Spark's own recommendation: respect the advisory target when
         # coalescing instead of maximizing parallelism — tiny reduce
         # stages merge down to the data's size (measured -0.5 s across
         # the sf0.1 headline; the advisory mirrors the 2 MB
-        # per-partition target of scaled_shuffle_partitions, and a
-        # cluster overrides it alongside SPARK_GRAFT_SHUFFLE_PARTITIONS
-        # — a too-small advisory only under-merges, never starves)
+        # per-partition target of scaled_shuffle_partitions — a
+        # too-small advisory only under-merges, never starves)
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "2m"),
+            _ADVISORY_PARTITION_BYTES,
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

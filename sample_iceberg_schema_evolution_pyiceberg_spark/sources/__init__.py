@@ -13,9 +13,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sample_iceberg_schema_evolution_pyiceberg_spark.session import (
-    adaptive_enabled,
     broadcast_threshold_bytes,
-    declared_input_bytes,
+    heavy_input,
+    input_bytes,
+    scaled_shuffle_partitions,
 )
 
 TESTDATA_TABLES = (
@@ -34,7 +35,6 @@ TESTDATA_TABLES = (
 # balanced file sizes for exactly this reason); we mirror that: first read
 # of a table rewrites it once, row-preserving, into N parquet files under a
 # local cache dir, and every scan after that parallelizes across all cores.
-# Disable with SPARK_GRAFT_SPLIT_CACHE=0.
 # ---------------------------------------------------------------------------
 
 _SPLIT_CACHE_DIR = os.environ.get(
@@ -57,8 +57,6 @@ def _split_cached_path(src: str) -> str:
     """Return a path to a multi-file copy of ``src``, building it on
     first use; falls back to ``src`` itself on any failure (the cache
     is an optimization, never a correctness dependency)."""
-    if os.environ.get("SPARK_GRAFT_SPLIT_CACHE", "1") == "0":
-        return src
     try:
         import pyarrow.parquet as pq  # noqa: PLC0415
 
@@ -115,19 +113,18 @@ def ensure_session_confs(spark: SparkSession) -> None:
             return
     except Exception:  # noqa: BLE001
         pass
-    _nbytes = declared_input_bytes()
     for k, v in (
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
         ("spark.sql.session.timeZone", "UTC"),
-        # input-sized AQE gate (session.adaptive_enabled): on for real
-        # inputs (skew-join splits, runtime coalescing — the 100 TB
-        # posture), off below 64 MB where the per-exchange re-plan
-        # round trip is pure fixed cost (+30% wall measured at sf0.1,
-        # tools/aqe_experiment.py r10)
+        # input-sized AQE gate (session.heavy_input over the declared
+        # deployment dir): on for real inputs (skew-join splits,
+        # runtime coalescing — the 100 TB posture), off below 64 MB
+        # where the per-exchange re-plan round trip is pure fixed cost
+        # (+30% wall measured at sf0.1, commit d2f5277)
         (
             "spark.sql.adaptive.enabled",
-            str(adaptive_enabled(_nbytes) if _nbytes else True).lower(),
+            str(heavy_input(os.environ.get("SPARK_GRAFT_SF_DIR"))).lower(),
         ),
         # local-bench split sizing: the split-cache files are ~0.5 MB, so
         # pack at 2 MB to keep one split per core (cluster deployments
@@ -282,7 +279,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # (one-time, ingest-shaped cost, like the split cache above), and the
 # returned catalog table carries the bucket spec Catalyst needs to
 # eliminate the Exchange on both sides. Falls back to the plain scan on
-# any failure; disable with SPARK_GRAFT_BUCKETED=0.
+# any failure.
 # ---------------------------------------------------------------------------
 
 _BUCKETS = 32  # parallelism cap; actual count sized by data below
@@ -297,11 +294,7 @@ def buckets_for(sf_dir: str) -> int:
     count always matches and the zero-exchange plan is preserved; the
     layout-cache name embeds the count, so a re-sized run lays out
     fresh instead of mixing bucket widths."""
-    from ..session import _dir_input_bytes, scaled_shuffle_partitions
-
-    if env := os.environ.get("SPARK_GRAFT_BUCKETS"):
-        return int(env)
-    nbytes = _dir_input_bytes(sf_dir)
+    nbytes = input_bytes(sf_dir)
     return (
         scaled_shuffle_partitions(nbytes, _BUCKETS) if nbytes else _BUCKETS
     )
@@ -316,8 +309,6 @@ def bucketed_table(
     bucketed write aligns write tasks with bucket ids (same murmur3
     pmod), yielding one file per bucket so sort-merge join can also
     skip the per-partition sort (buckets are written sorted by key)."""
-    if os.environ.get("SPARK_GRAFT_BUCKETED", "1") == "0":
-        return load_table(spark, sf_dir, name)
     if buckets is None:
         buckets = buckets_for(sf_dir)
     base = load_table(spark, sf_dir, name)

@@ -5,7 +5,6 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
 
 # Dummy AWS credentials for the moto-backed S3/Glue tests. Set BEFORE
 # the session-scoped Spark fixture launches the JVM so Python workers
@@ -26,7 +25,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from sample_iceberg_schema_evolution_pyiceberg_spark.session import get_spark
 
-    s = get_spark(app_name="tests")
+    s = get_spark(app_name="tests", shuffle_partitions=4)
     yield s
     s.stop()
 

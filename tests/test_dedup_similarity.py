@@ -6,6 +6,7 @@ correctness burden for MinHash/SimHash/ANN)."""
 from __future__ import annotations
 
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -735,3 +736,36 @@ def test_semantic_dedup_production_entrypoint(spark):
     assert got[1] is True and got[8] is False and got[9] is False
     # distinct singletons survive
     assert all(got[i] for i in range(2, 6))
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("name", ["c02_dedup_minhash_lsh", "c04_dedup_ngram_jaccard"])
+def test_heavy_input_gate_both_sides(spark, planted_docs, monkeypatch, name):
+    """c02's ds persist and c04's (doc_a, doc_b) repartition are gated
+    on heavy_input(sf): the planted corpus is light, and lowering the
+    64 MB bound makes it heavy. Both sides return the same pairs and
+    Jaccards; only the heavy side carries the extra plan node."""
+    from sample_iceberg_schema_evolution_pyiceberg_spark import session
+    from sample_iceberg_schema_evolution_pyiceberg_spark.operators import dedup
+
+    query = getattr(dedup, name)
+    light = query(spark, planted_docs)
+    light_plan = _plan(light)
+    light_rows = sorted(tuple(r) for r in light.collect())
+    monkeypatch.setattr(session, "_HEAVY_INPUT_BYTES", 1)
+    heavy = query(spark, planted_docs)
+    heavy_plan = _plan(heavy)
+    assert sorted(tuple(r) for r in heavy.collect()) == light_rows
+    assert light_rows  # the planted pairs are found on both sides
+    if name.startswith("c04"):
+        marker = re.compile(
+            r"Exchange hashpartitioning\(doc_a#\d+L?, doc_b#\d+L?, \d+\), "
+            r"REPARTITION_BY_NUM"
+        )
+    else:  # the persisted candidate gram sets, read by both join arms
+        marker = re.compile(r"InMemoryRelation \[doc_a#\d+L?, ga#\d+\]")
+    assert marker.search(heavy_plan)
+    assert not marker.search(light_plan)

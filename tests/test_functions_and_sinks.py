@@ -158,6 +158,39 @@ def test_asof_join_tolerance(spark):
     assert got == {100.0: 7.0, 200.0: None}  # 105s gap exceeds tolerance
 
 
+def test_asof_join_keeps_left_types(spark):
+    """A right side with wider key/time types (bigint vs int, timestamp
+    vs timestamp_ntz) must not widen the output's left columns; the
+    match is unchanged, and a right key no int can hold matches
+    nothing."""
+    import datetime as dt
+
+    from sample_iceberg_schema_evolution_pyiceberg_spark.functions import asof_join
+
+    ts = dt.datetime
+    left = spark.createDataFrame(
+        [(1, ts(2024, 1, 1, 10)), (1, ts(2024, 1, 1, 12)), (2, ts(2024, 1, 1, 9))],
+        "k int, t timestamp_ntz",
+    )
+    right = spark.createDataFrame(
+        [(1, ts(2024, 1, 1, 11), 7.0), (2, ts(2024, 1, 1, 8), 9.0),
+         (2**40, ts(2024, 1, 1, 8), 1.0)],
+        "rk bigint, rt timestamp, px double",
+    )
+    out = asof_join(left, right, on=("k", "rk"), left_time="t", right_time="rt")
+    assert out.schema["k"] == left.schema["k"]
+    assert out.schema["t"] == left.schema["t"]
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [
+        "int", "timestamp_ntz", "double"
+    ]
+    got = {(r.k, r.t): r.px for r in out.collect()}
+    assert got == {
+        (1, ts(2024, 1, 1, 10)): None,  # right row is in the future
+        (1, ts(2024, 1, 1, 12)): 7.0,
+        (2, ts(2024, 1, 1, 9)): 9.0,
+    }
+
+
 def test_asof_join_single_shuffle_plan(spark):
     """The union-merge as-of join must plan ONE exchange (hash on the
     key for the window) — no join operator, no per-key fan-out."""

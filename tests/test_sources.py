@@ -3,8 +3,12 @@ table memoization."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from sample_iceberg_schema_evolution_pyiceberg_spark import sources
 
@@ -45,14 +49,6 @@ def test_split_cache_skips_small_files(tmp_path, monkeypatch):
     assert sources._split_cached_path(str(src)) == str(src)
 
 
-def test_split_cache_disabled_by_env(tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SPLIT_CACHE", "0")
-    table = pa.table({"k": pa.array(range(100_000), pa.int64())})
-    src = tmp_path / "big.parquet"
-    pq.write_table(table, src, row_group_size=100_000)
-    assert sources._split_cached_path(str(src)) == str(src)
-
-
 def test_load_table_memoized(spark, sf_dir):
     a = sources.load_table(spark, sf_dir, "nation")
     b = sources.load_table(spark, sf_dir, "nation")
@@ -69,7 +65,7 @@ def test_topk_prune_threshold_retains_topk(tmp_path, monkeypatch):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    monkeypatch.setenv("SPARK_GRAFT_SPLIT_CACHE", "0")
+    monkeypatch.setattr(sources, "_SPLIT_CACHE_DIR", str(tmp_path / "cache"))
     for seed in (1, 7, 42):
         rng = random.Random(seed)
         n = rng.randint(500, 3000)
@@ -96,7 +92,7 @@ def test_topk_prune_threshold_fallbacks(tmp_path, monkeypatch):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    monkeypatch.setenv("SPARK_GRAFT_SPLIT_CACHE", "0")
+    monkeypatch.setattr(sources, "_SPLIT_CACHE_DIR", str(tmp_path / "cache"))
     sfdir = tmp_path / "sf"
     sfdir.mkdir()
     pq.write_table(
@@ -169,3 +165,89 @@ def test_read_orc_evolved_widen_and_refusals(spark, tmp_path):
         shutil.copy(f, dd2 / f"part-{i}.orc")
     with _pytest.raises(ValueError, match="not an Avro-legal widening"):
         read_orc_evolved(spark, str(dd2))
+
+
+def _bucketed_fixture(tmp_path):
+    """A small orders table in its own sf dir."""
+    sfdir = tmp_path / "sf"
+    sfdir.mkdir()
+    pq.write_table(
+        pa.table({
+            "o_orderkey": pa.array(range(2000), pa.int64()),
+            "o_total": pa.array([i * 0.5 for i in range(2000)], pa.float64()),
+        }),
+        sfdir / "orders.parquet",
+    )
+    return str(sfdir)
+
+
+def _groups_without_exchange(df) -> bool:
+    """A bucketed scan already clusters rows by key: grouping by it
+    plans no Exchange."""
+    g = df.groupBy("o_orderkey").count()
+    return "Exchange" not in g._jdf.queryExecution().executedPlan().toString()
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _listing(path):
+    return {f: os.stat(os.path.join(path, f)).st_mtime_ns for f in os.listdir(path)}
+
+
+def test_bucketed_table_build_then_adopt(spark, tmp_path):
+    """Fresh build writes a bucketed layout; a new catalog entry over a
+    COMPLETE prior build (_SUCCESS present) adopts it unrewritten."""
+    sfdir = _bucketed_fixture(tmp_path)
+    plain = sources.load_table(spark, sfdir, "orders")
+    assert not _groups_without_exchange(plain)
+    want = _rows(plain)
+
+    built = sources.bucketed_table(spark, sfdir, "orders", "o_orderkey", buckets=4)
+    path = os.path.dirname(built.inputFiles()[0].removeprefix("file:"))
+    name = os.path.basename(path)
+    try:
+        assert os.path.exists(os.path.join(path, "_SUCCESS"))
+        assert len(built.inputFiles()) == 4  # one sorted file per bucket
+        assert _groups_without_exchange(built)
+        assert _rows(built) == want
+
+        # a new catalog entry over the same warehouse files (what a
+        # fresh session sees): the catalog forgets the table, the
+        # complete build stays on disk
+        shutil.copytree(path, tmp_path / "saved")
+        spark.sql(f"DROP TABLE `{name}`")
+        shutil.copytree(tmp_path / "saved", path)
+        before = _listing(path)
+
+        adopted = sources.bucketed_table(
+            spark, sfdir, "orders", "o_orderkey", buckets=4
+        )
+        assert spark.catalog.tableExists(name)
+        assert _listing(path) == before  # adopted, not rewritten
+        assert _groups_without_exchange(adopted)
+        assert _rows(adopted) == want
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def test_bucketed_table_failed_build_falls_back_loudly(spark, tmp_path, monkeypatch):
+    """A layout build that fails (disk full during the write) warns and
+    serves the plain scan: same rows, no bucket spec."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sfdir = _bucketed_fixture(tmp_path)
+
+    def disk_full(self, *a, **k):
+        raise OSError(28, "No space left on device")
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", disk_full)
+    with pytest.warns(RuntimeWarning, match="falling back to a plain scan"):
+        got = sources.bucketed_table(
+            spark, sfdir, "orders", "o_orderkey", buckets=4
+        )
+    assert got is sources.load_table(spark, sfdir, "orders")
+    assert not _groups_without_exchange(got)
+    assert len(_rows(got)) == 2000

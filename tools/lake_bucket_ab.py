@@ -7,7 +7,7 @@ Used for bench_results/sf100_lake_bucket_ab_r12.json: spark vs dual
 layout twins built by make_sf100_lake.py --layout {spark,dual}.
 
 Usage:
-  SPARK_GRAFT_DRIVER_MEM=24g SPARK_GRAFT_BUCKETS=32 \
+  SPARK_GRAFT_DRIVER_MEM=24g \
   python tools/lake_bucket_ab.py --sf-dir benchdata/sf100 \
       --wh-a benchdata/lake_bkt_wh_sf100.0 \
       --wh-b benchdata/lake_bkt_wh_sf100.0_dual \
